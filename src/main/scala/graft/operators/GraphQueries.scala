@@ -501,18 +501,14 @@ object GraphQueries {
     * PropertySpec additionally asserts every exact-Jaccard ≥0.9 pair of
     * the fixture lands in one component. */
   def dedupCcLsh(s: SparkSession, d: String): DataFrame = {
-    // The ≥0.9 cut applies to the exact-verified Jaccard of the staged
-    // LSH pair store (rounded 4dp — a true 0.89996 rounds in; declared
-    // semantics), so the edge set is "LSH-candidate AND verified ≥0.9".
-    // Round 15: reads SimilarityQueries.lshPairs (the stage-once edge
-    // store simPairsLsh also serves from) instead of re-mining the band
-    // self-join + verify per invocation — identical values by
-    // construction (the store holds the scan's own output), and the
-    // un-ordered store skips simPairsLsh's final ORDER BY, which the
-    // checkpoint inside ccOverPairs discarded anyway.
+    // Edges: the staged LSH pair store (the one simPairsLsh serves from)
+    // cut at the ingest gate's rounded ≥0.9 — a true 0.89996 rounds in,
+    // declared semantics. The un-ordered store skips simPairsLsh's final
+    // ORDER BY, which the checkpoint inside ccOverPairs discards anyway.
     ccOverPairs(s,
       SimilarityQueries.lshPairs(s, d)
-        .filter(col("jaccard") >= 0.9).select("d1", "d2"),
+        .filter(NearDup.LshGate.keep(col("common"), col("n1"), col("n2")))
+        .select("d1", "d2"),
       documents(s, d).select("doc_id"), "doc_id")
   }
 

@@ -1145,11 +1145,12 @@ object SimilarityQueries {
 
   private def shingleCol(t: Column): Column = TextQueries.ngrams(t, 3)
 
-  /** Per-document DISTINCT shingle array, built entirely in the map stage
-    * (`array_distinct` instead of explode → global distinct — no shuffle).
-    * The shared substrate for MinHash signatures and exact-Jaccard verify. */
-  private def docShingleArrays(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
+  /** Per-document DISTINCT shingle array of a (doc_id, text) frame,
+    * built entirely in the map stage (`array_distinct` instead of
+    * explode → global distinct — no shuffle). The shared substrate for
+    * MinHash signatures and exact-Jaccard verify. */
+  private[operators] def docSets(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), toks(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
@@ -1200,10 +1201,10 @@ object SimilarityQueries {
       case _ =>
         BucketedLayout.dropWithLocation(s, docsT, root)
         s.sql(s"DROP TABLE IF EXISTS $bandsT")
-        BucketedLayout.writeBucketed(docShingleArrays(s, d), docsT,
+        BucketedLayout.writeBucketed(docSets(documents(s, d)), docsT,
           "doc_id", 32, Some(docsPath))
         BucketedLayout.writeBucketed(
-          bandRowsOf(s.table(docsT)).select("doc_id", "sig"), bandsT,
+          bandRowsOf(s.table(docsT)), bandsT,
           "sig", 32, Some(bandsPath))
         Staging.markStaged(s, root, spec +
           "\n" + s.table(docsT).schema.toDDL +
@@ -1212,17 +1213,16 @@ object SimilarityQueries {
     (s.table(docsT), s.table(bandsT))
   }
 
-  /** The shared banded-MinHash pipeline: (doc_id, sarr) → one band row
-    * per (doc, band) keyed by the band's signature hash. All k min-hash
-    * values come from ONE codegen'd pass over the hash array (the
-    * MinHashSigs expression — the k×(transform→array_min) HOF form
+  /** The shared banded-MinHash pipeline: (doc_id, sarr) → one
+    * (doc_id, sig) row per (doc, band), keyed by the band's signature
+    * hash. All k min-hash values come from ONE codegen'd pass over the
+    * hash array (the MinHashSigs expression — the k×(transform→array_min) HOF form
     * evaluates interpreted, k passes with a lambda frame per element);
     * the band signature is xxhash64 over (band, its 4 minhashes) — one
     * 8-byte join key instead of a built string. A 64-bit collision can
     * only ADD a candidate pair, and every candidate passes exact-Jaccard
-    * verification downstream, so correctness is unaffected. The shingle
-    * array rides along so that verify is a local `array_intersect`. */
-  private def bandRowsOf(docs: DataFrame): DataFrame = {
+    * verification downstream, so correctness is unaffected. */
+  private[operators] def bandRowsOf(docs: DataFrame): DataFrame = {
     val base = docs.withColumn("harr",
       transform(col("sarr"), x => pmod(xxhash64(x), lit(Prime))))
     val sigArr = call_function("graft_minhash_sigs", col("harr"),
@@ -1231,26 +1231,14 @@ object SimilarityQueries {
     val sigCols = (0 until MinhashK).map(i =>
       element_at(col("mharr"), i + 1).as(s"mh$i"))
     val sigs = base.withColumn("mharr", sigArr)
-      .select(col("doc_id") +: col("sarr") +: sigCols: _*)
+      .select(col("doc_id") +: sigCols: _*)
     sigs.select(
-      col("doc_id"), col("sarr"),
+      col("doc_id"),
       explode(array((0 until Bands).map { b =>
         xxhash64(lit(b) +: (0 until Rows).map(r =>
           col(s"mh${b * Rows + r}")): _*).as("sig")
       }: _*)).as("sig"))
-      .select(col("doc_id"), col("sarr"), col("sig"))
   }
-
-  /** Band rows derived directly from a (doc_id, text) frame — the same
-    * shingle→MinHash→band pipeline the staged layout runs at ingest,
-    * exposed for the STREAMING ingest gate (q_stream_lsh_ingest), whose
-    * micro-batches arrive as raw text and band map-side, delta-sized. */
-  private[operators] def bandRowsForDocs(docs: DataFrame): DataFrame =
-    bandRowsOf(docs
-      .select(col("doc_id"), toks(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(shingleCol(col("toks"))).as("sarr")))
 
   /** Fuzzy near-dup pairs via banded MinHash.
     *
@@ -1266,7 +1254,10 @@ object SimilarityQueries {
     * oracle); the property test additionally checks every
     * exact-Jaccard-≥0.8 pair from q_dedup_ngram is recovered. */
   def simPairsLsh(s: SparkSession, d: String): DataFrame =
-    lshPairs(s, d).orderBy("d1", "d2")
+    lshPairs(s, d)
+      .select(col("d1"), col("d2"),
+        NearDup.jaccard(col("common"), col("n1"), col("n2")).as("jaccard"))
+      .orderBy("d1", "d2")
 
   /** The verified LSH near-dup EDGE STORE, staged once per corpus —
     * round 15's extension of the round-10 embedPairs discipline to the
@@ -1284,50 +1275,32 @@ object SimilarityQueries {
     * Same stage-once protocol as embedPairs (BucketedLayout: listing
     * fingerprint + bucket spec in the marker, written LAST; any corpus
     * regeneration restages; DDL-only re-register across JVMs). The
-    * store holds [[lshPairScan]]'s own output, so consumer values are
-    * identical by construction and every oracle hash-match (the LshSql
-    * band-replay twin) is unaffected. Bucketed ×32 by d1 to mirror the
-    * embedPairs layout. */
+    * store holds [[lshPairScan]]'s own exact counts (d1, d2, common, n1,
+    * n2), so a stricter consumer cut is the same exact rule. Bucketed
+    * ×32 by d1 to mirror the embedPairs layout. */
   private[operators] def lshPairs(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{BucketedLayout, SourceQueries}
     val pairsT = s"graft_lsh_pairs_${SourceQueries.sfName(d)}"
     BucketedLayout.ensureBucketed(s, lshPairScan(s, d), pairsT, "d1",
       buckets = 32,
-      path = s"${SourceQueries.scratch(d, "lsh_pairs_layout")}/pairs",
+      path = s"${SourceQueries.scratch(d, "lsh_pair_counts")}/pairs",
       sources = Seq(s"$d/documents.parquet"))
     s.table(pairsT)
   }
 
-  /** The staging-time computation behind [[lshPairs]]: candidate mining
-    * + exact-Jaccard verification over the staged LSH layout. */
+  /** The staging-time computation behind [[lshPairs]]: band self-join
+    * candidates (same bucketed-by-sig layout on both sides — bucket i
+    * joins bucket i, no Exchange) through [[NearDup.verified]] at
+    * Jaccard ≥ 0.5. */
   private[graft] def lshPairScan(s: SparkSession, d: String): DataFrame = {
-    // Candidate mining runs entirely on the staged band table: the
-    // self-join reads the same bucketed-by-sig layout on both sides (no
-    // Exchange — bucket i joins bucket i), pairs only materialize on a
-    // band collision, and only the SURVIVING candidate ids fetch their
-    // shingle arrays from the staged docs table for the exact-Jaccard
-    // verify (two equi-joins against the bucketed-by-doc_id side). The
-    // pre-staging formulation carried every doc's sarr into every band
-    // row — ×Bands array duplication through the shuffle; the staged
-    // split pays the array read only for actual candidates.
     val (docsT, bands) = lshLayout(s, d)
-    val cands = bands.as("x")
-      .join(bands.as("y"),
-        col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .dropDuplicates("d1", "d2")
-      .join(docsT.select(col("doc_id").as("d1"), col("sarr").as("sa")),
-        Seq("d1"))
-      .join(docsT.select(col("doc_id").as("d2"), col("sarr").as("sb")),
-        Seq("d2"))
-    // Exact-Jaccard verification, local to each candidate pair.
-    val common = size(array_intersect(col("sa"), col("sb"))).cast("long")
-    val jac = common.cast("double") /
-      (size(col("sa")) + size(col("sb")) - common)
-    cands
-      .filter(jac >= 0.5)
-      .select(col("d1"), col("d2"), round(jac, 4).as("jaccard"))
+    NearDup.verified(
+      bands.as("x")
+        .join(bands.as("y"),
+          col("x.sig") === col("y.sig") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")),
+      docsT, docsT, NearDup.LshPair)
   }
 
   /** Incremental near-dup ingest gate: each DELTA document (today's
@@ -1352,39 +1325,47 @@ object SimilarityQueries {
     *
     * Output: one row per delta doc — how many ≥0.9 base near-dups, the
     * best match (max Jaccard, min base id on ties) and its score, and
-    * the admit/reject flag an ingest pipeline thresholds on. */
+    * the admit/reject flag an ingest pipeline thresholds on. The
+    * streaming twin `q_stream_lsh_ingest` runs the same [[gateVerdicts]]
+    * per micro-batch and the same [[admit]] at the end. */
   def dedupIncrementalLsh(s: SparkSession, d: String): DataFrame = {
     val (docsT, bands) = lshLayout(s, d)
-    val delta = bands.filter(col("doc_id") % 4 === 0)
-    val base = bands.filter(col("doc_id") % 4 =!= 0)
-    val cands = delta.as("x")
-      .join(base.as("y"), col("x.sig") === col("y.sig"))
-      .select(col("x.doc_id").as("did"), col("y.doc_id").as("bid"))
-      .dropDuplicates("did", "bid")
-      .join(docsT.select(col("doc_id").as("did"), col("sarr").as("sa")),
-        Seq("did"))
-      .join(docsT.select(col("doc_id").as("bid"), col("sarr").as("sb")),
-        Seq("bid"))
-    val common = size(array_intersect(col("sa"), col("sb"))).cast("long")
-    val jac = common.cast("double") /
-      (size(col("sa")) + size(col("sb")) - common)
-    val best = cands
-      .select(col("did"), col("bid"), round(jac, 4).as("j"))
-      .filter(col("j") >= 0.9)
-      .groupBy("did")
+    admit(s, d,
+      gateVerdicts(s, d, bands.filter(col("doc_id") % 4 === 0), docsT))
+  }
+
+  /** The ingest gate for delta docs given as band rows (doc_id, sig)
+    * and shingle sets (doc_id, sarr): delta × base band collisions
+    * through [[NearDup.verified]] at round(Jaccard, 4) ≥ 0.9, one row
+    * (doc_id, n_dup_base, best_base, best_jaccard) per flagged doc. */
+  private[operators] def gateVerdicts(s: SparkSession, d: String,
+      deltaBands: DataFrame, deltaSets: DataFrame): DataFrame = {
+    val (docsT, bands) = lshLayout(s, d)
+    NearDup.verified(
+      deltaBands.select(col("doc_id").as("d1"), col("sig"))
+        .join(bands.filter(col("doc_id") % 4 =!= 0)
+          .select(col("doc_id").as("d2"), col("sig")), Seq("sig")),
+      deltaSets, docsT, NearDup.LshGate)
+      .groupBy("d1")
       .agg(count(lit(1)).as("n_dup_base"),
-        max(struct(col("j").as("j"), (-col("bid")).as("nb"))).as("m"))
-      .select(col("did").as("doc_id"), col("n_dup_base"),
+        max(struct(
+          NearDup.jaccard(col("common"), col("n1"), col("n2")).as("j"),
+          (-col("d2")).as("nb"))).as("m"))
+      .select(col("d1").as("doc_id"), col("n_dup_base"),
         (-col("m.nb")).as("best_base"), col("m.j").as("best_jaccard"))
-    documents(s, d).select(col("doc_id"))
-      .filter(col("doc_id") % 4 === 0)
-      .join(best, Seq("doc_id"), "left")
+  }
+
+  /** Every delta doc with its gate verdict; a doc without one is clean
+    * (n_dup_base 0, null best match, is_dup false). */
+  private[operators] def admit(s: SparkSession, d: String,
+      verdicts: DataFrame): DataFrame =
+    documents(s, d).select(col("doc_id")).filter(col("doc_id") % 4 === 0)
+      .join(verdicts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_dup_base"), lit(0L)).as("n_dup_base"),
         col("best_base"), col("best_jaccard"),
         col("n_dup_base").isNotNull.as("is_dup"))
       .orderBy("doc_id")
-  }
 
   /** SimHash near-dup pairs: 64-bit signature per document (tf-weighted
     * majority vote per bit of xxhash64(token)), then hamming-≤3 pairs via

@@ -176,7 +176,7 @@ object StatsQueries {
         |FROM v""".stripMargin,
     // Both groups' moments exact BIGINT dollars from one conditional
     // scan; pooled sd / d / g one shared IEEE tree; degenerate variance
-    // declared NULL via the exact integer compare.
+    // declared NULL via the exact HUGEINT compare.
     "q_agg_effectsize" ->
       """WITH m AS (
         |  SELECT
@@ -206,14 +206,16 @@ object StatsQueries {
         |  CASE WHEN n2 > 0 THEN
         |    round(CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE), 4)
         |    END AS mean_other,
-        |  CASE WHEN n1 * q1 > s1 * s1 OR n2 * q2 > s2 * s2 THEN
+        |  CASE WHEN CAST(n1 AS HUGEINT) * q1 > CAST(s1 AS HUGEINT) * s1
+        |      OR CAST(n2 AS HUGEINT) * q2 > CAST(s2 AS HUGEINT) * s2 THEN
         |    round(sqrt(((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
         |        * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
         |      + (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
         |        * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
         |      / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0)), 4)
         |    END AS pooled_sd,
-        |  CASE WHEN n1 * q1 > s1 * s1 OR n2 * q2 > s2 * s2 THEN
+        |  CASE WHEN CAST(n1 AS HUGEINT) * q1 > CAST(s1 AS HUGEINT) * s1
+        |      OR CAST(n2 AS HUGEINT) * q2 > CAST(s2 AS HUGEINT) * s2 THEN
         |    round((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
         |      - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
         |      / sqrt(((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
@@ -222,7 +224,8 @@ object StatsQueries {
         |          * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
         |        / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0)), 6)
         |    END AS cohens_d,
-        |  CASE WHEN n1 * q1 > s1 * s1 OR n2 * q2 > s2 * s2 THEN
+        |  CASE WHEN CAST(n1 AS HUGEINT) * q1 > CAST(s1 AS HUGEINT) * s1
+        |      OR CAST(n2 AS HUGEINT) * q2 > CAST(s2 AS HUGEINT) * s2 THEN
         |    round(((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
         |      - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
         |      / sqrt(((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
@@ -3089,13 +3092,12 @@ object StatsQueries {
     * pass); the pooled sd and both effect sizes are one shared IEEE
     * tree over those integers (`sqrt` is correctly rounded on every
     * engine), emitted rounded 6. Degenerate pooled variance (exact
-    * integer compare) declares NULL. */
+    * wide-integer compare) declares NULL. */
   def aggEffectSize(s: SparkSession, d: String): DataFrame = {
     val urgent = col("o_orderpriority") === "1-URGENT"
     // Whole DOLLARS, not cents: d and g are scale-invariant, and the
-    // dollar-scale sum of squares stays < 2^63 with two orders of
-    // magnitude of row-count headroom (cents overflow at ~1e5 rows of
-    // 5e5-dollar orders — measured).
+    // dollar-scale sum of squares stays < 2^63 up to ~3.7e7 rows of
+    // 5e5-dollar orders (cents overflow at ~1e5 rows — measured).
     val dollars = round(col("o_totalprice"), 0).cast("long")
     val m = orders(s, d).select(urgent.as("u"), dollars.as("c"))
       .agg(
@@ -3118,10 +3120,13 @@ object StatsQueries {
     val dEff = (m1 - m2) / sp
     val g = dEff * (lit(1.0) - lit(3.0) /
       (lit(4.0) * (n1 + n2) - lit(9.0)))
-    // n·q > s² on at least one group ⟺ pooled variance > 0; exact
-    // BIGINT compare keeps the degenerate case out of the divide.
-    val varPos = (col("n1") * col("q1") > col("s1") * col("s1")) ||
-      (col("n2") * col("q2") > col("s2") * col("s2"))
+    // n·q > s² on at least one group ⟺ pooled variance > 0; the exact
+    // compare keeps the degenerate case out of the divide. The products
+    // do not fit a BIGINT (≈1e20 at 1.5e5 orders of 5e5 dollars), so
+    // they run as DECIMAL(38,0) — HUGEINT in the twin.
+    val wide = (c: String) => col(c).cast("decimal(38,0)")
+    val varPos = (wide("n1") * wide("q1") > wide("s1") * wide("s1")) ||
+      (wide("n2") * wide("q2") > wide("s2") * wide("s2"))
     m.select(col("n1"), col("n2"),
       // Empty groups (an empty corpus) leave the means undefined —
       // declared NULL; the guards keep the divides unreachable under

@@ -618,22 +618,17 @@ object StreamQueries {
 
   /** Streaming near-dup ingest gate — the production shape the staged
     * LSH layout exists FOR: documents arrive as micro-batches of raw
-    * text, each batch bands MAP-SIDE (delta-sized MinHash pipeline, no
-    * corpus work), probes the staged base band table (bucketed by sig —
-    * the signature store [[SimilarityQueries.lshLayout]] maintains at
-    * ingest), exact-Jaccard-verifies each collision against the staged
-    * shingle arrays, and appends its admit/reject verdicts. The batch
-    * twin `q_dedup_incremental_lsh` runs the identical per-doc decision
-    * in one shot; since every delta doc's verdict depends only on that
-    * doc and the BASE (never on other delta docs), the streamed result
-    * is batch-boundary-independent — ScaleOpsSpec pins stream ≡ batch
-    * row-for-row, which is also why the batch twin's oracle applies
-    * verbatim (hash-matched since round 10).
-    *
-    * Scale: per micro-batch cost is delta-bands × colliding base
-    * buckets + verify joins keyed by doc_id — the daily-crawl ingest
-    * gate at 100 TB, where the base tables are the write-once bucketed
-    * layout and only the delta ever shuffles. */
+    * text; each batch shingles and bands MAP-SIDE (delta-sized, no
+    * corpus work) and runs the batch gate
+    * [[SimilarityQueries.gateVerdicts]] on its own band rows and sets
+    * against the staged base (the signature store
+    * [[SimilarityQueries.lshLayout]] maintains), appending the verdicts.
+    * Every delta doc's verdict depends only on that doc and the BASE, so
+    * the result is batch-boundary-independent: ScaleOpsSpec pins it
+    * equal to the batch twin `q_dedup_incremental_lsh` row-for-row, and
+    * that twin's oracle applies verbatim. Per micro-batch cost is
+    * delta-bands × colliding base buckets + verify joins keyed by
+    * doc_id; only the delta ever shuffles. */
   def streamLshIngest(s: SparkSession, d: String): DataFrame = {
     val outDir = graft.sources.SourceQueries.scratch(d, "lsh_ingest_out")
     val delta = graft.Tables.documents(s, d)
@@ -658,53 +653,18 @@ object StreamQueries {
       .option("maxFilesPerTrigger", "1")
       .option("latestFirst", "false")
       .parquet(s"$base/b*")
+    def gate(ss: SparkSession, docs: DataFrame): DataFrame = {
+      val sets = SimilarityQueries.docSets(docs)
+      SimilarityQueries.gateVerdicts(ss, d,
+        SimilarityQueries.bandRowsOf(sets), sets)
+    }
     val ckpt = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
     try {
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val ss = batch.sparkSession
-          val (baseDocs, baseBands) = SimilarityQueries.lshLayout(ss, d)
-          val deltaBands = SimilarityQueries.bandRowsForDocs(batch)
-            .select(col("doc_id").as("did"), col("sarr").as("sa"),
-              col("sig"))
-          // Round 15 (measured via a batch replica of this body + the
-          // r15 StreamProf pass — addBatch IS this query's cost, the
-          // micro-batch machinery around it is ~0.1 s/batch): verify +
-          // the ≥0.9 cut now run BELOW the (did, bid) dedup. A
-          // duplicate collision row (one per shared band) carries the
-          // same (did, bid) ⇒ the same (sa, sb) ⇒ the SAME j, so
-          // filter∘dedup = dedup∘filter (the fe89b7e commute argument,
-          // applied to the ingest gate). The old shape dedup'd FIRST,
-          // which (a) dragged the delta's shingle arrays through the
-          // dedup exchange and (b) ran the pre-verify SortAggregate
-          // pair over the FULL collision set; now the dedup exchange
-          // carries only ≥0.9-qualifying (did, bid, j) rows — at
-          // 100 TB the difference between shuffling every band
-          // collision's array payload and shuffling confirmed
-          // duplicates. Verify runs per COLLISION row instead of per
-          // pair (a near-dup pair verifies once per shared band, ≤4×),
-          // but it is a local array_intersect inside the broadcast
-          // joins — map-side work, no wire.
-          val common =
-            size(array_intersect(col("sa"), col("sb"))).cast("long")
-          val jac = common.cast("double") /
-            (size(col("sa")) + size(col("sb")) - common)
-          deltaBands
-            .join(baseBands.filter(col("doc_id") % 4 =!= 0)
-              .select(col("doc_id").as("bid"), col("sig")), Seq("sig"))
-            .join(baseDocs.select(col("doc_id").as("bid"),
-              col("sarr").as("sb")), Seq("bid"))
-            .select(col("did"), col("bid"), round(jac, 4).as("j"))
-            .filter(col("j") >= 0.9)
-            .dropDuplicates("did", "bid")
-            .groupBy("did")
-            .agg(count(lit(1)).as("n_dup_base"),
-              max(struct(col("j").as("j"), (-col("bid")).as("nb")))
-                .as("m"))
-            .select(col("did").as("doc_id"), col("n_dup_base"),
-              (-col("m.nb")).as("best_base"), col("m.j").as("best_jaccard"))
-            .write.mode("append").parquet(outDir)
+          gate(batch.sparkSession, batch).write.mode("append")
+            .parquet(outDir)
           ()
         }
         .option("checkpointLocation", ckpt.toString)
@@ -712,24 +672,10 @@ object StreamQueries {
         .start()
       q.awaitTermination()
     } finally deleteRecursively(ckpt)
-    val verdictSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_dup_base",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("best_base",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("best_jaccard",
-        org.apache.spark.sql.types.DoubleType)))
-    val verdicts = s.read.schema(verdictSchema).parquet(outDir)
-    graft.Tables.documents(s, d).select(col("doc_id"))
-      .filter(col("doc_id") % 4 === 0)
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_dup_base"), lit(0L)).as("n_dup_base"),
-        col("best_base"), col("best_jaccard"),
-        col("n_dup_base").isNotNull.as("is_dup"))
-      .orderBy("doc_id")
+    // Read back under the gate's own output schema (a batch that found
+    // no near-dup may leave no file to infer it from).
+    SimilarityQueries.admit(s, d,
+      s.read.schema(gate(s, delta).schema).parquet(outDir))
   }
 
   /** Sliding windows: 10-minute width, 5-minute slide. */

@@ -2362,7 +2362,7 @@ object TextQueries {
     * the dedup, and the dedup exchange carries only QUALIFYING pairs
     * (measured 1.13M → ~10³ rows at sf0.1: the candidate pair space is
     * wire-dominated by sub-threshold pairs this cut drops map-side). */
-  private[operators] def ngramPairScores(
+  private[graft] def ngramPairScores(
       s: SparkSession, d: String,
       keep: org.apache.spark.sql.Column): DataFrame = {
     // Plan shape (measured, not guessed): the two corpus-linear shared
@@ -2480,35 +2480,17 @@ object TextQueries {
     * pairs — see [[ngramPairScores]] for the full candidate-generation /
     * verification design.
     *
-    * The keep cut is the EXACT integer-rational form of `jac ≥ 0.6`:
-    * c/(n1+n2−c) ≥ 3/5 ⟺ 8c ≥ 3(n1+n2) (longs; no overflow below
-    * 2⁶⁰ shingles). Why not the double division: the cut pushes into
-    * the verify join's condition, where Catalyst INLINES the `common`
-    * alias — and the Jaccard formula references `common` twice
-    * (numerator and denominator), so the pushed condition evaluated
-    * `array_intersect(h1, h2)` TWICE per candidate pair (~1.13M pairs
-    * at sf0.1; measured 2.3 vs 1.3 s against containment's
-    * single-reference form, identical task bytes). The integer form
-    * references `common` once and drops the cast/divide from the hot
-    * loop. Equivalence with the double form (which the DuckDB twin
-    * still evaluates): double division is correctly rounded, so the
-    * two predicates can only disagree when the exact rational
-    * c/(n1+n2−c) lies within half an ulp (~5.6e-17 at 0.6) of the
-    * 0.6 literal without equalling it — impossible for denominators
-    * below ~6·10⁷ because distinct rationals p/q, 3/5 differ by at
-    * least 1/(5q). Documents with >10⁷ shingles do not exist in this
-    * corpus family at any SF; PropertySpec pins the two forms equal
-    * over adversarial magnitudes. The OUTPUT jaccard stays the
-    * unchanged double `round(c/(n1+n2−c), 4)`. */
-  def dedupNgram(s: SparkSession, d: String): DataFrame = {
-    val jac = col("common").cast("double") /
-      (col("n1") + col("n2") - col("common"))
-    val keep = col("common") * 8 >= (col("n1") + col("n2")) * 3
-    ngramPairScores(s, d, keep)
+    * The keep cut is [[NearDup.Ngram]] (8c ≥ 3(n1+n2)), not the double
+    * `jac ≥ 0.6`: pushed into the verify join's condition, the Jaccard
+    * formula inlined `common` twice — two `array_intersect(h1, h2)` per
+    * candidate pair (~1.13M pairs at sf0.1). The OUTPUT jaccard
+    * stays the double `round(c/(n1+n2−c), 4)`. */
+  def dedupNgram(s: SparkSession, d: String): DataFrame =
+    ngramPairScores(s, d,
+      NearDup.Ngram.keep(col("common"), col("n1"), col("n2")))
       .select(col("d1"), col("d2"), col("common"),
-        round(jac, 4).as("jaccard"))
+        NearDup.jaccard(col("common"), col("n1"), col("n2")).as("jaccard"))
       .orderBy("d1", "d2")
-  }
 
   /** Subset-duplicate pairs by CONTAINMENT ≥ 0.8: common / min(|A|, |B|)
     * — how much of the SMALLER document lives inside the larger. The
@@ -2522,16 +2504,12 @@ object TextQueries {
     * final score differs — so the df-cut bound, the identical-set
     * recovery path, and the declared all-hot recall hole carry over
     * unchanged.
-    *
-    * The keep cut is the exact integer form of `cont ≥ 0.8`:
-    * c/min(n1,n2) ≥ 4/5 ⟺ 5c ≥ 4·min(n1,n2) — same single-reference /
-    * division-free discipline (and equivalence argument) as
-    * [[dedupNgram]]'s cut; the output containment stays the unchanged
-    * double `round(c/min(n1,n2), 4)`. */
+    * The keep cut is [[NearDup.Containment]] (5c ≥ 4·min(n1,n2)); the
+    * output containment stays the double `round(c/min(n1,n2), 4)`. */
   def dedupContainment(s: SparkSession, d: String): DataFrame = {
     val cont = col("common").cast("double") / least(col("n1"), col("n2"))
-    val keep = col("common") * 5 >= least(col("n1"), col("n2")) * 4
-    ngramPairScores(s, d, keep)
+    ngramPairScores(s, d,
+      NearDup.Containment.keep(col("common"), col("n1"), col("n2")))
       .select(col("d1"), col("d2"), col("common"),
         round(cont, 4).as("containment"))
       .orderBy("d1", "d2")

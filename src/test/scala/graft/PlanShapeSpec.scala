@@ -238,6 +238,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       s"block-pair fan-out should be a broadcast hash join:\n$plan")
   }
 
+  test("the LSH near-dup cut references the intersection once") {
+    // The skeleton's cut is pushed into the attach join's condition with
+    // `common` inlined; the exact integer rule references it once, so
+    // the condition holds one array_intersect and the verify Project
+    // the other (a cut reading `common` twice, as the double Jaccard
+    // did, puts two in the condition: 4 in the plan). Pinned on the
+    // optimized plan of the batch gate and of the pair store's staging
+    // computation.
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    def intersections(df: DataFrame): Seq[Int] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .map(_.collect { case a: ArrayIntersect => a }.size)
+        .filter(_ > 0)
+    for ((name, df) <- Seq(
+        "q_dedup_incremental_lsh" ->
+          SimilarityQueries.dedupIncrementalLsh(spark, sfDir),
+        "lshPairScan" -> SimilarityQueries.lshPairScan(spark, sfDir))) {
+      val n = intersections(df)
+      assert(n.forall(_ == 1) && n.size <= 2,
+        s"$name ($n):\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
   test("ORC scans push filters and prune columns like parquet") {
     // The round-trip query certifies correctness; this certifies the
     // 100×-scale plan property on the SAME staged data: a predicate +

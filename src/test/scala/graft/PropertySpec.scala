@@ -309,50 +309,154 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       refJac.map(t => (t._1, t._2)))
   }
 
+  test("near-dup skeleton: LSH pairs and gate verdicts equal brute force " +
+      "on an adversarial identical-set corpus; ngram cut commutes with dedup") {
+    import spark.implicits._
+    import graft.operators.NearDup
+    // Clusters of identical docs whose shingles are also shared with
+    // near-dups, so one pair reaches the candidate join through several
+    // bands and, for the n-gram pipeline, through both the cold
+    // candidate path and the identical-set group path:
+    //  - 60 identical boilerplate docs (every shingle hot for the
+    //    n-gram df-cut) and three near-dups that share them, two of
+    //    which are identical to each other (cold shingle df = 2);
+    //  - a 5-member identical cluster with cold shingles, and near-dups
+    //    at Jaccard 0.6 and 0.8 to it;
+    //  - an unrelated doc and a too-short one.
+    val corpus =
+      (0L until 60L).map(i => (i, "boiler plate spam text page footer")) ++
+        Seq((60L, "boiler plate spam text page footer extra"),
+          (61L, "boiler plate spam text page footer extra"),
+          (62L, "boiler plate spam text page footer other")) ++
+        (100L until 105L).map(i => (i, "alpha beta gamma delta epsilon zeta")) ++
+        Seq((105L, "alpha beta gamma delta epsilon eta"),
+          (106L, "alpha beta gamma delta epsilon zeta theta"),
+          (107L, "omega psi chi phi upsilon tau"), (108L, "too short"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-skeleton").toString
+    corpus.toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // Brute force: exact 3-token shingle sets, all pairs.
+    val sets = corpus.collect { case (id, t) if t.split(" ").length >= 3 =>
+      id -> t.split(" ").sliding(3).map(_.toSeq).toSet }.toMap
+    def exact(a: Long, b: Long): (Long, Long, Long) = {
+      val c = (sets(a) & sets(b)).size.toLong
+      (c, sets(a).size.toLong, sets(b).size.toLong)
+    }
+    def round4(c: Long, n1: Long, n2: Long): Double =
+      BigDecimal(c.toDouble / (n1 + n2 - c))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val ids = sets.keys.toSeq.sorted
+    val allPairs = for (a <- ids; b <- ids if a < b) yield (a, b)
+
+    val lsh = SimilarityQueries.simPairsLsh(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(lsh.map(t => (t._1, t._2)).distinct.length === lsh.length,
+      "a pair reported twice")
+    lsh.foreach { case (a, b, j) =>
+      val (c, n1, n2) = exact(a, b)
+      assert(a < b && 3 * c >= n1 + n2, s"($a, $b) below Jaccard 0.5")
+      assert(j === round4(c, n1, n2), s"($a, $b) score")
+    }
+    val ones = allPairs.filter { case (a, b) => sets(a) == sets(b) }
+    assert(ones.length === 1770 + 1 + 10)
+    assert((ones.toSet -- lsh.map(t => (t._1, t._2))).isEmpty,
+      "a Jaccard-1.0 pair went unreported")
+
+    // The ingest gate: every verdict is a verified ≥0.9 base match, and
+    // a delta doc with an identical base doc is always flagged.
+    val gate = SimilarityQueries.dedupIncrementalLsh(spark, dir).collect()
+    assert(gate.map(_.getLong(0)).toSeq ===
+      corpus.map(_._1).filter(_ % 4 == 0).sorted)
+    gate.foreach { r =>
+      val did = r.getLong(0)
+      val base = ids.filter(b => b % 4 != 0 && sets.contains(did) && {
+        val (c, n1, n2) = exact(did, b); round4(c, n1, n2) >= 0.9 })
+      val identical = base.count(b => sets(b) == sets(did))
+      assert(r.getLong(1) >= identical && r.getLong(1) <= base.length,
+        s"delta $did: ${r.getLong(1)} matches, brute force $identical..${base.length}")
+      assert(r.getBoolean(4) === (r.getLong(1) > 0))
+      if (r.getBoolean(4)) {
+        val (c, n1, n2) = exact(did, r.getLong(2))
+        assert(base.contains(r.getLong(2)) &&
+          r.getDouble(3) === round4(c, n1, n2), s"delta $did best match")
+      }
+    }
+    assert(gate.count(_.getBoolean(4)) >= 15, "the gate flagged too few")
+
+    // The n-gram pipeline cuts BEFORE its pair dedup; that must equal
+    // cutting after it, for every cut it serves.
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("d1", "d2", "common", "n1", "n2").collect()
+        .map(r => (0 until 5).map(r.getLong)).toSeq
+    for (cut <- Seq(NearDup.Ngram, NearDup.Containment)) {
+      val keep = cut.keep(col("common"), col("n1"), col("n2"))
+      val pushed = rows(TextQueries.ngramPairScores(spark, dir, keep))
+      val after = rows(
+        TextQueries.ngramPairScores(spark, dir, lit(true)).filter(keep))
+      assert(pushed.distinct.length === pushed.length)
+      assert(pushed.sortBy(_.toString) === after.sortBy(_.toString), s"$cut")
+      assert(pushed.length > 1770)
+    }
+  }
+
   test("integer score cuts equal the double-division predicates " +
       "(dedup_ngram 8c≥3(n1+n2), containment 5c≥4·min)") {
     import spark.implicits._
-    // Round 15: the keep cuts inside ngramPairScores run as exact
-    // integer-rational predicates (single reference to `common`, no
-    // division — see dedupNgram's scaladoc for why the double form
-    // evaluated array_intersect twice in the pushed join condition).
-    // The DuckDB twin still evaluates the double forms, so pin the two
-    // predicate families EQUAL through Catalyst itself: every exact
-    // threshold boundary ±1 (where a misrounded division would flip
-    // the comparison) plus randomized magnitudes up to 10⁶ shingles —
+    // Every near-dup keep cut runs as NearDup's exact integer rule
+    // (single reference to `common`, no division); the DuckDB twins
+    // still evaluate the double forms, rounded 4 where the query
+    // declares it. So pin each cut of the rule's table EQUAL to Spark's
+    // own double predicate through Catalyst: every exact threshold
+    // boundary ±1 (where a misrounded division would flip the
+    // comparison) plus randomized magnitudes up to 10⁶ shingles —
     // inside the range where correctly-rounded double division provably
-    // agrees with exact rational comparison (disagreement needs
-    // denominators ≳ 6·10⁷).
+    // agrees with exact rational comparison.
+    import graft.operators.NearDup
     val rnd = new scala.util.Random(42)
-    val boundary = for {
-      m <- Seq(1L, 2L, 5L, 40L, 1000L, 333333L)
-      // Jaccard boundary: 8c = 3s exactly ⇒ c = 3m, n1 + n2 = 8m;
-      // containment boundary: 5c = 4·min ⇒ c = 4m, min(n1, n2) = 5m.
-      // Probe c at -1/0/+1 around each exact boundary.
-      dc <- Seq(-1L, 0L, 1L)
-    } yield (3 * m + dc, 4 * m, 4 * m)
-    val contBoundary = for {
-      m <- Seq(1L, 2L, 5L, 40L, 1000L, 333333L)
-      dc <- Seq(-1L, 0L, 1L)
-    } yield (4 * m + dc, 5 * m, 5 * m + rnd.nextInt(1000).toLong)
+    val c = col("common"); val n1 = col("n1"); val n2 = col("n2")
     val random = (1 to 3000).map { _ =>
-      val n1 = 1L + rnd.nextInt(1000000)
-      val n2 = 1L + rnd.nextInt(1000000)
-      val c = rnd.nextLong(math.min(n1, n2) + 1)
-      (c, n1, n2)
+      val a = 1L + rnd.nextInt(1000000)
+      val b = 1L + rnd.nextInt(1000000)
+      (rnd.nextLong(math.min(a, b) + 1), a, b)
     }
-    val rows = (boundary ++ contBoundary ++ random)
-      .filter { case (c, n1, n2) => c >= 0 && c <= math.min(n1, n2) }
-      .toDF("common", "n1", "n2")
-    val jacD = col("common").cast("double") /
-      (col("n1") + col("n2") - col("common"))
-    val contD = col("common").cast("double") / least(col("n1"), col("n2"))
-    val bad = rows.filter(
-      ((jacD >= 0.6) =!= (col("common") * 8 >= (col("n1") + col("n2")) * 3))
-        || ((contD >= 0.8) =!=
-          (col("common") * 5 >= least(col("n1"), col("n2")) * 4)))
-    assert(bad.count() === 0L,
-      s"predicate forms disagree: ${bad.collect().take(5).mkString(",")}")
+    for (cut <- NearDup.cuts) {
+      val (p, q) = (cut.p, cut.q)
+      // The boundary c/score-denominator = p/q exactly, at magnitudes m
+      // up to 333333 wherever n1 + n2 = (p+q)·m stays ≤ 3·10⁶ (the
+      // rounded cut's q = 20000 stops lower); c probed at −1/0/+1 with
+      // the other sizes held, and (Jaccard) also with the union size
+      // c + D held instead of n1 + n2.
+      val boundary = for {
+        m <- (Seq(1L, 2L, 3L, 5L, 40L, 1000L, 333333L / q + 1) ++
+          Seq(333333L).filter(_ * (p + q) <= 3000000L)).distinct
+        dc <- Seq(-1L, 0L, 1L)
+        row <- if (cut.containment) {
+          val lo = q * m
+          Seq((p * m + dc, lo, lo + rnd.nextInt(1000).toLong))
+        } else {
+          val sum = (p + q) * m
+          Seq((p * m + dc, sum / 2, sum - sum / 2),
+            (p * m + dc, (sum + dc) / 2, sum + dc - (sum + dc) / 2))
+        }
+      } yield row
+      val rows = (boundary ++ random)
+        .filter { case (cc, a, b) => cc >= 0 && cc <= math.min(a, b) }
+        .toDF("common", "n1", "n2")
+      val score =
+        if (cut.containment) c.cast("double") / least(n1, n2)
+        else c.cast("double") / (n1 + n2 - c)
+      val declared = cut.roundedTo.fold(score)(k => round(score, k)) >=
+        lit(cut.t.toDouble)
+      val bad = rows.filter(declared =!= cut.keep(c, n1, n2))
+      assert(bad.count() === 0L, s"$cut (p/q = $p/$q) disagrees with its " +
+        s"double form: ${bad.collect().take(5).mkString(",")}")
+      assert(rows.filter(cut.keep(c, n1, n2)).count() > 0L &&
+        rows.filter(!cut.keep(c, n1, n2)).count() > 0L)
+    }
+    // The rule's fractions are the declared ones, reduced.
+    assert(NearDup.cuts.map(k => (k.p, k.q)) ===
+      Seq((1L, 2L), (17999L, 20000L), (3L, 5L), (4L, 5L)))
   }
 
   test("dedup_ngram df-cut is invisible below the document floor") {

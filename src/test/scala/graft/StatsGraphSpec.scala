@@ -861,20 +861,26 @@ class StatsGraphSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("q_agg_effectsize matches a two-group moment replay") {
-    val rows = Tables.orders(spark, sfDir)
+  /** Replays q_agg_effectsize on `dir`'s orders with exact moments:
+    * whole-dollar prices per group, sums of squares as BigInt. */
+  private def assertEffectSizeReplay(dir: String): Unit = {
+    val rows = Tables.orders(spark, dir)
       .select("o_orderpriority", "o_totalprice").collect()
-      .map(r => (r.getString(0) == "1-URGENT",
-        math.round(r.getDouble(1)).toDouble))
+      .map(r => (r.getString(0) == "1-URGENT", math.round(r.getDouble(1))))
     val (g1, g2) = rows.partition(_._1)
     val (x1, x2) = (g1.map(_._2), g2.map(_._2))
-    def ss(x: Array[Double]) =
-      x.map(v => v * v).sum - x.sum * x.sum / x.length
-    val sp = math.sqrt((ss(x1) + ss(x2)) / (x1.length + x2.length - 2.0))
-    val dEff = (x1.sum / x1.length - x2.sum / x2.length) / sp
+    val mc = java.math.MathContext.DECIMAL128
+    def ss(x: Array[Long]) = {
+      val sum = BigDecimal(x.map(BigInt(_)).sum, mc)
+      BigDecimal(x.map(v => BigInt(v) * v).sum, mc) - sum * sum / x.length
+    }
+    val sp = math.sqrt(((ss(x1) + ss(x2)) /
+      (x1.length + x2.length - 2)).toDouble)
+    val dEff = (BigDecimal(x1.sum, mc) / x1.length -
+      BigDecimal(x2.sum, mc) / x2.length).toDouble / sp
     val g = dEff *
       (1.0 - 3.0 / (4.0 * (x1.length + x2.length) - 9.0))
-    val r = graft.operators.StatsQueries.aggEffectSize(spark, sfDir)
+    val r = graft.operators.StatsQueries.aggEffectSize(spark, dir)
       .collect().head
     assert(r.getAs[Long]("n1") == x1.length)
     assert(r.getAs[Long]("n2") == x2.length)
@@ -884,6 +890,27 @@ class StatsGraphSpec extends AnyFunSuite with SparkFixture {
     assert(math.abs(r.getAs[Double]("hedges_g"))
       <= math.abs(r.getAs[Double]("cohens_d")) + 1e-12,
       "the bias correction shrinks |d|")
+  }
+
+  test("q_agg_effectsize matches a two-group moment replay") {
+    assertEffectSizeReplay(sfDir)
+  }
+
+  test("q_agg_effectsize variance guard holds at sf0.1 magnitudes") {
+    // 1.5e5 orders near 5e5 dollars, the sf0.1 regime: n·Σc² and (Σc)²
+    // reach ~1e20, past a BIGINT — the guard must compare them exactly
+    // without an overflow.
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-effectsize").toString
+    spark.range(150000L)
+      .select(
+        when(col("id") % 5 === 0, lit("1-URGENT")).otherwise(lit("3-MEDIUM"))
+          .as("o_orderpriority"),
+        (lit(499000.25) + (col("id") * 7919L) % 2000L +
+          when(col("id") % 5 === 0, lit(150.0)).otherwise(lit(0.0)))
+          .as("o_totalprice"))
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    assertEffectSizeReplay(dir)
   }
 
   test("q_embed_mmr matches a serial greedy replay; diversity holds") {
