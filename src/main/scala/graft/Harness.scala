@@ -19,6 +19,8 @@ object Harness {
       // Primary site for the naive-timestamp mapping (Tables.table
       // re-asserts it only when unset, for driver-owned sessions).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // Likewise for events' INT64 nanos timestamps (Tables.events).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // ObjectHashAggregate (the execution home of graft_topk_by and
       // every TypedImperativeAggregate) falls back to SORT-based
@@ -52,11 +54,12 @@ object Harness {
     * (the round-7 drift: timed pass totals climbed 164 → 218 → 265 s
     * across three sweeps of 294 queries):
     *
-    *  1. `localCheckpoint` blocks — ~40 call sites materialize
-    *     intermediate frames; the blocks are freed only when the
-    *     ContextCleaner notices the RDD is unreachable (GC-driven), so a
-    *     fast sweep outruns the cleaner and every pass executes under
-    *     the previous passes' dead blocks' memory pressure.
+    *  1. `localCheckpoint` blocks — [[graft.operators.Materialize]],
+    *     the one seam every operator materializes through; the blocks
+    *     are freed only when the ContextCleaner notices the RDD is
+    *     unreachable (GC-driven), so a fast sweep outruns the cleaner
+    *     and every pass executes under the previous passes' dead
+    *     blocks' memory pressure.
     *  2. memory-sink stream tables — handled at the source:
     *     StreamQueries.runToTable drops its temp view once the caller's
     *     DataFrame holds the materialized plan (not here — a catalog

@@ -46,11 +46,14 @@ object Tables {
     * conf, floored to µs by integer division — the same truncation DuckDB's
     * `epoch_us` applies) and plain TIMESTAMP(MICROS) (already the target
     * type after [[table]]'s NTZ-inference opt-out). Branch on what the
-    * footer actually says so both generations read identically. */
+    * footer actually says so both generations read identically. The
+    * legacy conf is set by Harness and re-asserted here only when not
+    * already in effect, the same guard [[table]] uses. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val k = "spark.sql.legacy.parquet.nanosAsLong"
+    if (s.conf.get(k, "false") != "true") s.conf.set(k, "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>

@@ -301,7 +301,7 @@ object AggQueries {
       .groupBy("r_name", "n_name")
       .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
         .as("cents"))
-      .localCheckpoint()
+      .transform(Materialize("shareHierarchy.leaf"))
     val reg = leaf.groupBy("r_name").agg(sum("cents").as("r_cents"))
     val tot = leaf.agg(sum("cents").as("t_cents"))
     leaf.join(reg, Seq("r_name"))

@@ -1772,7 +1772,7 @@ object CurateQueries {
         pmod(conv(substring(md5(col("bg").cast("binary")), 1, 4),
           16, 10).cast("long"), lit(B)).as("b"))
       .groupBy("doc_id", "is_t", "b").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Materialize("selectDsir.bucketCounts"))
     val raw = bgc.groupBy("b").agg(sum("c").as("rb"))
     val tgt = bgc.filter(col("is_t")).groupBy("b").agg(sum("c").as("tb"))
     val tots = bgc.agg(
@@ -2079,13 +2079,13 @@ object CurateQueries {
     val e = embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
         dot(col("embedding"), col("embedding")).as("nrm2"))
-      .localCheckpoint()
+      .transform(Materialize("selectKcenter.points"))
     val d2 = col("nrm2") + col("c_nrm2") -
       lit(2.0) * dot(col("embedding"), col("c_emb"))
     var centers = e.orderBy("vec_id").limit(1)
       .select(lit(1).as("center_rank"), col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("nrm2").as("c_nrm2"))
-      .localCheckpoint()
+      .transform(Materialize("selectKcenter.seed"))
     for (r <- 2 to 4) {
       val dmin = e.crossJoin(broadcast(centers))
         .select(col("vec_id"), d2.as("d2"))
@@ -2097,7 +2097,8 @@ object CurateQueries {
       val grown = next.join(e, Seq("vec_id"))
         .select(lit(r).as("center_rank"), col("vec_id").as("c_id"),
           col("embedding").as("c_emb"), col("nrm2").as("c_nrm2"))
-      centers = centers.unionByName(grown).localCheckpoint()
+      centers = centers.unionByName(grown)
+        .transform(Materialize("selectKcenter.centers"))
     }
     val asg = e.crossJoin(broadcast(centers))
       .select(col("vec_id"),

@@ -734,7 +734,7 @@ object FeatureQueries {
       .agg(call_function("graft_topk_by",
           -col("pfx").cast("double"), col("doc_id"), lit(100)).as("top"),
         count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(Materialize("curriculumOrder.perStage"))
     val kept = perStage
       .select(col("stage"), posexplode(col("top")).as(Seq("p", "t")))
       .select(col("stage"), col("t.id").as("doc_id"),
@@ -1100,17 +1100,18 @@ object FeatureQueries {
     * ~3 s fixed overhead the fold removes. */
   private[graft] def evalBradleyTerryDistributed(
       s: SparkSession, d: String): DataFrame = {
-    val nij = btPairCounts(s, d).localCheckpoint()
+    val nij = btPairCounts(s, d)
+      .transform(Materialize("evalBradleyTerryDistributed.pairCounts"))
     val games = nij.select(col("wi").as("i"), col("lj").as("j"), col("n"))
       .union(nij.select(col("lj").as("i"), col("wi").as("j"), col("n")))
       .groupBy("i", "j").agg(sum("n").as("g"))
-      .localCheckpoint()
+      .transform(Materialize("evalBradleyTerryDistributed.games"))
     val brands = games.select(col("i").as("brand")).distinct()
     val w0 = brands
       .join(nij.groupBy(col("wi").as("brand")).agg(sum("n").as("ww")),
         Seq("brand"), "left")
       .select(col("brand"), coalesce(col("ww"), lit(0L)).as("wins"))
-      .localCheckpoint()
+      .transform(Materialize("evalBradleyTerryDistributed.wins"))
     val wAll = Window.partitionBy()
     var sF = w0.select(col("brand"), lit(1.0).as("s"))
     for (_ <- 1 to 5) {
@@ -1131,7 +1132,7 @@ object FeatureQueries {
         .withColumn("s", round(col("su").cast("double")
           / sum("su").over(wAll).cast("double"), 9))
         .select(col("brand"), col("s"))
-        .localCheckpoint()
+        .transform(Materialize("evalBradleyTerryDistributed.strengths"))
     }
     val gt = games.groupBy(col("i").as("brand")).agg(sum("g").as("games"))
     w0.join(gt, Seq("brand")).join(sF, Seq("brand"))

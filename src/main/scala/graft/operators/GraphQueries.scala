@@ -580,12 +580,12 @@ object GraphQueries {
     * no-inlink fixed point 0.15 in the final broadcast-right join. */
   def graphPagerank(s: SparkSession, d: String): DataFrame = {
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .localCheckpoint()
+      .transform(Materialize("graphPagerank.pairs"))
     // The edge list is pre-partitioned on the join key ONCE (the
     // checkpointed LogicalRDD carries its partitioning), so the ten
     // per-round contribution joins add no exchange on the edge side.
     val und = pairs.union(pairs.select(col("v2"), col("v1")))
-      .repartition(col("v1")).localCheckpoint()
+      .repartition(col("v1")).transform(Materialize("graphPagerank.edges"))
     // State carries (node, degree, r) together: degree rides along so
     // the outbox is a pure projection, not a per-round join.
     var state = und.groupBy(col("v1").as("node"))
@@ -605,7 +605,8 @@ object GraphQueries {
       // two rounds of plan (each job's fixed cost dominated this query's
       // bench profile at 10 cuts), while the uncut half stays a bounded
       // two-round plan — never an exponentially growing lineage.
-      if (round % 2 == 0) state = state.localCheckpoint()
+      if (round % 2 == 0)
+        state = state.transform(Materialize("graphPagerank.state"))
     }
     embeddings(s, d).select("vec_id")
       .join(state.select(col("node").as("vec_id"), col("r")),
@@ -656,7 +657,8 @@ object GraphQueries {
       pairs: DataFrame, vertices: DataFrame, idCol: String): DataFrame = {
     // The pair pipeline feeds the degree agg, the orientation join and
     // the closing-edge join — materialize it once, like ccOverPairs.
-    val canon = pairs.toDF("lo", "hi").localCheckpoint()
+    val canon = pairs.toDF("lo", "hi")
+      .transform(Materialize("trianglesOverPairs.pairs"))
     val und = canon.union(canon.select(col("hi"), col("lo")))
       .toDF("node", "peer")
     val deg = und.groupBy("node").agg(count(lit(1)).as("degree"))
@@ -713,7 +715,8 @@ object GraphQueries {
     // Edge pipeline MATERIALIZED once: GraphX evaluates its input RDD
     // several times (vertex derivation + Pregel), and without the
     // checkpoint each evaluation re-runs the upstream candidate join.
-    val edges = pairs.toDF("src", "dst").localCheckpoint()
+    val edges = pairs.toDF("src", "dst")
+      .transform(Materialize("ccLabels.edges"))
     val nEdges = edges.count() // free on the checkpointed blocks
     val parts = math.max(1L, (nEdges + EdgesPerPartition - 1) /
       EdgesPerPartition).toInt
@@ -730,7 +733,8 @@ object GraphQueries {
     // Materialize the labels, then release the Pregel caches eagerly —
     // ContextCleaner would get there eventually, but a long-lived session
     // (bench warm+timed, the test suites) shouldn't hold graph blocks.
-    val labels = cc.vertices.toDF(idCol, "component").localCheckpoint()
+    val labels = cc.vertices.toDF(idCol, "component")
+      .transform(Materialize("ccLabels.labels"))
     cc.unpersist(blocking = false)
     graph.unpersist(blocking = false)
     labels
@@ -812,13 +816,13 @@ object GraphQueries {
     * it round r re-derives rounds 1..r−1). */
   def graphLabelProp(s: SparkSession, d: String): DataFrame = {
     val edges = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .localCheckpoint()
+      .transform(Materialize("graphLabelProp.pairs"))
     val und = edges.unionByName(
       edges.select(col("v2").as("v1"), col("v1").as("v2")))
     var lab = embeddings(s, d).select(col("vec_id"),
         when(col("vec_id") % 5 === 0, col("label")).as("lbl"),
         when(col("vec_id") % 5 === 0, 0).as("rnd"))
-      .localCheckpoint()
+      .transform(Materialize("graphLabelProp.seed"))
     for (r <- 1 to 3) {
       val nb = und
         .join(lab.filter(col("lbl").isNotNull)
@@ -834,7 +838,7 @@ object GraphQueries {
           coalesce(col("lbl"), col("alb")).as("lbl"),
           coalesce(col("rnd"),
             when(col("alb").isNotNull, r)).as("rnd"))
-        .localCheckpoint()
+        .transform(Materialize("graphLabelProp.labels"))
     }
     lab.select(col("vec_id"), col("lbl").as("label_final"),
         col("rnd").as("round_labeled"),
@@ -878,7 +882,7 @@ object GraphQueries {
     * wedge gen via und, adjacency anti-join, degree table). */
   def graphLinkpred(s: SparkSession, d: String): DataFrame = {
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .localCheckpoint()
+      .transform(Materialize("graphLinkpred.pairs"))
     val und = pairs.union(pairs.select(col("v2"), col("v1")))
     val deg = und.groupBy(col("v1").as("node"))
       .agg(count(lit(1)).as("degree"))
@@ -938,7 +942,7 @@ object GraphQueries {
     * lineage is cut by localCheckpoint (the k-means discipline). */
   def graphKcore(s: SparkSession, d: String): DataFrame = {
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .localCheckpoint()
+      .transform(Materialize("graphKcore.pairs"))
     // Pre-partitioned ONCE on the per-round join key (v2, the neighbor
     // whose estimate flows in): the checkpointed LogicalRDD carries its
     // partitioning, and est is node-partitioned by construction after
@@ -946,13 +950,13 @@ object GraphQueries {
     // — each round's only exchange is the unavoidable v1 re-key for the
     // h-index aggregation (the q_graph_pagerank round-9 template).
     val und = pairs.union(pairs.select(col("v2"), col("v1")))
-      .repartition(col("v2")).localCheckpoint()
+      .repartition(col("v2")).transform(Materialize("graphKcore.edges"))
     val deg = und.groupBy(col("v1").as("node"))
       .agg(count(lit(1)).as("degree"))
     var est = embeddings(s, d).select(col("vec_id").as("node"))
       .join(deg, Seq("node"), "left")
       .select(col("node"), coalesce(col("degree"), lit(0L)).as("est"))
-      .localCheckpoint()
+      .transform(Materialize("graphKcore.seed"))
     for (round <- 1 to 6) {
       val h = und.join(est.withColumnRenamed("node", "v2")
           .withColumnRenamed("est", "nest"), Seq("v2"))
@@ -968,7 +972,8 @@ object GraphQueries {
       // Lineage cut every SECOND round (the pagerank cadence): one
       // materialization amortizes two rounds of plan; the uncut half
       // stays a bounded two-round tree, never a growing lineage.
-      if (round % 2 == 0) est = est.localCheckpoint()
+      if (round % 2 == 0)
+        est = est.transform(Materialize("graphKcore.estimates"))
     }
     est.join(deg, Seq("node"), "left")
       .select(col("node").as("vec_id"),
@@ -996,7 +1001,7 @@ object GraphQueries {
     * ≤#labels frame (windows over that frame, never a corpus cross). */
   def graphModularity(s: SparkSession, d: String): DataFrame = {
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .localCheckpoint()
+      .transform(Materialize("graphModularity.pairs"))
     val lab = embeddings(s, d)
       .select(col("vec_id"), col("label").cast("long").as("lab"))
     val e = pairs

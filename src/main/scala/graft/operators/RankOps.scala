@@ -104,7 +104,7 @@ object RankOps {
     val sorted = df.repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__g_mid", monotonically_increasing_id())
-      .localCheckpoint()
+      .transform(Materialize("rangeSortedWithMid.sorted"))
     (sorted, shiftright(col("__g_mid"), 33),
       col("__g_mid").bitwiseAND(lit((1L << 33) - 1)))
   }

@@ -1714,8 +1714,10 @@ object SimilarityQueries {
     // iteration scan the corpus exactly once — 3 scans total, the
     // Lloyd minimum, and the shape an iterative pipeline must have at
     // 100 TB (checkpoint the TINY frame, rescan the big one).
-    val c1 = recompute(assign(c0)).localCheckpoint()
-    val c2 = recompute(assign(c1)).localCheckpoint()
+    val c1 = recompute(assign(c0))
+      .transform(Materialize("embedKmeans.centroids1"))
+    val c2 = recompute(assign(c1))
+      .transform(Materialize("embedKmeans.centroids2"))
     val a3 = assign(c2)
     val census = a3.groupBy("cid")
       .agg(count(lit(1)).as("n_vecs"), round(sum("dist"), 4).as("inertia"))
@@ -1754,20 +1756,20 @@ object SimilarityQueries {
       .select(col("vec_id"), col("embedding"),
         round(cosine(col("embedding"), col("pv")), 4).as("cq"))
       .orderBy(col("cq").desc, col("vec_id")).limit(16)
-      .localCheckpoint()
+      .transform(Materialize("embedMmr.candidates"))
     val pairs = cand.select(col("vec_id").as("i"),
         col("embedding").as("ei"))
       .join(cand.select(col("vec_id").as("j"),
         col("embedding").as("ej")), col("i") =!= col("j"))
       .select(col("i"), col("j"),
         round(cosine(col("ei"), col("ej")), 4).as("sim"))
-      .localCheckpoint()
+      .transform(Materialize("embedMmr.pairSims"))
     var chosen = cand
       .orderBy(col("cq").desc, col("vec_id")).limit(1)
       .select(col("vec_id"), lit(1L).as("rank"), col("cq"),
         lit(0.0).as("redundancy"),
         round(lit(0.7) * col("cq"), 4).as("mmr_score"))
-      .localCheckpoint()
+      .transform(Materialize("embedMmr.seed"))
     for (r <- 2 to 5) {
       val red = cand
         .join(chosen.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -1784,7 +1786,7 @@ object SimilarityQueries {
           round(lit(0.7) * col("b.q") - lit(0.3) * col("b.red"), 4)
             .as("mmr_score"))
         .filter(col("vec_id").isNotNull)
-      chosen = chosen.union(pick).localCheckpoint()
+      chosen = chosen.union(pick).transform(Materialize("embedMmr.chosen"))
     }
     chosen.orderBy("rank")
   }
@@ -2126,7 +2128,7 @@ object SimilarityQueries {
       .select((bit(1, 4) + bit(2, 2) + bit(3, 1)).cast("long")
         .as("cluster"), col("label"))
       .groupBy("cluster", "label").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Materialize("evalClusterPurity.contingency"))
     val cm = cont.groupBy("cluster")
       .agg(sum("n").as("n_c"),
         min(struct((-col("n")).as("neg"), col("label").as("lbl")))
@@ -2216,7 +2218,7 @@ object SimilarityQueries {
       .crossJoin(broadcast(probes))
       .select(col("probe_id"), col("vec_id"),
         round(cosine(col("embedding"), col("pv")), 4).as("cos_sim"))
-      .localCheckpoint()
+      .transform(Materialize("alignMargin.scored"))
     def top4Units(key: String, idCol: String, out: String): DataFrame =
       scored.groupBy(key)
         .agg(call_function("graft_topk_by",

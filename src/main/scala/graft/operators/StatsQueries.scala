@@ -2315,7 +2315,7 @@ object StatsQueries {
     * exact, one IEEE division per measure. */
   def audienceOverlap(s: SparkSession, d: String): DataFrame = {
     val tu = events(s, d).select(col("event_type"), col("user_id"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize("audienceOverlap.typeUsers"))
     val sz = tu.groupBy("event_type").agg(count(lit(1)).as("n"))
     val inter = tu.as("a")
       .join(tu.as("b"),
@@ -2429,7 +2429,7 @@ object StatsQueries {
     val baskets = lineitem(s, d)
       .groupBy(col("l_orderkey").as("ok"))
       .agg(collect_set(col("l_partkey")).as("ps"))
-      .localCheckpoint()
+      .transform(Materialize("basketPairs.baskets"))
     val n = baskets.agg(count(lit(1)).as("n_baskets"))
     val cnt = baskets.select(explode(col("ps")).as("pk"))
       .groupBy("pk").agg(count(lit(1)).as("cnt"))
@@ -2691,7 +2691,7 @@ object StatsQueries {
         datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
           .cast("long").as("dn"))
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize("eventDau.activeDays"))
     val bounds = act.agg(min("dn").as("mind"), max("dn").as("maxd"))
     val wau = act
       .select(col("user_id"),

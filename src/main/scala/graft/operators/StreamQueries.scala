@@ -371,12 +371,10 @@ object StreamQueries {
     val name = s"graft_stream_${seq.incrementAndGet()}"
     val ckpt = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = s.conf.get(noDataKey)
-    s.conf.set("spark.sql.shuffle.partitions", replayStateParts)
-    s.conf.set(noDataKey, finalNoDataBatch.toString)
-    try {
+    try withConf(s,
+        "spark.sql.shuffle.partitions" -> replayStateParts,
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          finalNoDataBatch.toString) {
       val q = df.writeStream
         .format("memory")
         .queryName(name)
@@ -385,11 +383,7 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set(noDataKey, prevNoData)
-      deleteRecursively(ckpt)
-    }
+    } finally deleteRecursively(ckpt)
     // `table` resolves the view to the sink's plan EAGERLY (Dataset
     // construction analyzes), so the catalog entry can be dropped here:
     // the returned DataFrame owns the materialized rows and releases
@@ -400,6 +394,21 @@ object StreamQueries {
     val out = df.sparkSession.table(name)
     s.catalog.dropTempView(name)
     out
+  }
+
+  /** Run `body` with session confs overridden, then restore each key as
+    * found: a key the session had not set is unset again, not pinned to
+    * the default value `conf.get` reports for it. */
+  private def withConf[T](s: SparkSession, overrides: (String, String)*)(
+      body: => T): T = {
+    val explicit = s.conf.getAll
+    val prior = overrides.map { case (k, _) => k -> explicit.get(k) }
+    overrides.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
   }
 
   /** Best-effort recursive delete of a throwaway replay checkpoint (they
@@ -820,11 +829,9 @@ object StreamQueries {
     * only for the duration of the run and is restored after. */
   def streamStatefulTws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try {
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")) {
       val events = EventStreams.fileStream(s, d).as[Event]
       val updated = events
         .groupByKey(_.user_id)
@@ -851,7 +858,7 @@ object StreamQueries {
         .select(col("user_id"), col("n_events"),
           round(col("sum_value"), 2).as("sum_value"))
         .orderBy("user_id")
-    } finally s.conf.set(key, prev)
+    }
   }
 
   /** Stream-static join: the unbounded event stream enriched against the

@@ -1624,14 +1624,10 @@ object TextQueries {
     // tf IS the document frequency). The former t.distinct().groupBy
     // re-exploded and re-shuffled the whole token stream for a value the
     // tf table already determines (round-14 optimization — one corpus
-    // explode and one corpus exchange fewer). The checkpoint serves the
-    // df agg and the score join; tf is vocabulary×doc-grain, skinny.
-    // §5 TRADE: (doc, term)-grain rows pinned executor-local,
-    // lineage-fragile under executor loss; recompute loses (the
-    // alternative re-explodes and re-shuffles the full token stream) —
-    // see textNgramLm's checkpoint note for the full argument.
+    // explode and one corpus exchange fewer). Materialized for the df
+    // agg and the score join; recomputing it re-explodes the corpus.
     val tf = t.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(Materialize("tfidf.tf"))
     val dfTerm = tf.groupBy("term")
       .agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
@@ -1687,13 +1683,11 @@ object TextQueries {
     // exploded the corpus three times — tf, a doc-keyed length count,
     // and a full (doc, term) DISTINCT re-shuffle for df (round-14
     // optimization: one corpus explode + exchange instead of three).
-    // The checkpoint serves the four derived frames and the score join;
+    // Materialized for the four derived frames and the score join;
     // this is the shared scorer behind q_text_bm25, q_search_rerank,
     // and q_search_rrf, so the trim lands in all three.
-    // §5 TRADE: same pinned-executor-storage / lineage-fragility note
-    // as tfidf's tf checkpoint (see textNgramLm for the full argument).
     val tf = t.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(Materialize("bm25Scores.tf"))
     val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val dfTerm = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val q = dfTerm.orderBy(col("df").desc, col("term")).limit(5)
@@ -2236,7 +2230,7 @@ object TextQueries {
     * generated mini corpora exercise that path every test run).
     *
     * One marker governs BOTH tables: they derive from one shared
-    * computation (`sh`, localCheckpoint'd only inside this stage-time
+    * computation (`sh`, materialized only inside this stage-time
     * block so the explode+distinct is paid once, not once per table) and
     * a pair of per-table markers could validate a half-written stage. */
   private[operators] def shingleLayout(
@@ -2273,7 +2267,7 @@ object TextQueries {
           .select(col("doc_id"), explode(shingles(col("toks"))).as("s"))
           .select(col("doc_id"), xxhash64(col("s")).as("shingle"))
           .distinct()
-          .localCheckpoint()
+          .transform(Materialize("shingleLayout.shingles"))
         // ONE heavy aggregation over sh serves the whole verify side:
         // `sets` (per-doc full shingle arrays). The doc-count scalar,
         // the full-set cardinality, and the per-doc hot arrays are all
@@ -2791,7 +2785,7 @@ object TextQueries {
     val counts = documents(s, d)
       .select(explode(toks(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Materialize("vocabBuild.counts"))
     val tot = counts.agg(sum("n").as("total"))
     val w = Window.orderBy(col("n").desc, col("tok"))
     counts.orderBy(col("n").desc, col("tok")).limit(256)
@@ -2816,25 +2810,11 @@ object TextQueries {
     * drift ~1e-12 — far inside the rounding). */
   def textNgramLm(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    // The bigram stream feeds the model count AND the scoring rejoin —
-    // the 52ef747 rejoin shape: left lazy, the tokenize + bigram explode
-    // ran twice. One localCheckpoint of the skinny (doc_id, w1, w2)
-    // frame serves both (round-14 optimization). V likewise reduces
-    // from the unigram count table (vocabulary size = its row count)
-    // instead of a second count_distinct pass over the exploded corpus.
-    // §5 TRADE (r14 verdict #8 — this checkpoint is CORPUS-scale, one
-    // row per bigram occurrence): it pins O(corpus) bytes in executor
-    // local block storage for the query's lifetime and is
-    // lineage-fragile under executor loss (a lost block fails the
-    // query; it cannot recompute). Recompute loses anyway: the
-    // alternative re-runs tokenize+explode over every document — strictly
-    // more bytes READ than the checkpoint holds (text > skinny bigram
-    // rows) plus a second full scan's CPU — and the window between the
-    // two consumers is one query, not a session. A multi-executor
-    // deployment that cannot accept the fragility swaps this for the
-    // staged-layout discipline (shingleLayout) at ingest; the
-    // single-JVM bench harness releases the blocks right after the
-    // action (Harness.releaseTransient).
+    // The bigram stream feeds the model count AND the scoring rejoin;
+    // left lazy, the tokenize + bigram explode ran twice, so the skinny
+    // (doc_id, w1, w2) frame is materialized once (round-14). V reduces
+    // from the unigram count table (vocabulary size = its row count),
+    // not a second count_distinct pass over the exploded corpus.
     val bg = docs
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -2843,12 +2823,12 @@ object TextQueries {
           struct(element_at(col("t"), i).as("w1"),
             element_at(col("t"), i + 1).as("w2")))).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .localCheckpoint()
+      .transform(Materialize("textNgramLm.bigrams"))
     val toksAll = docs.select(explode(toks(col("text"))).as("tok"))
     val bgc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cbg"))
     val ugc = toksAll.groupBy("tok").agg(count(lit(1)).as("cu"))
       .withColumnRenamed("tok", "w1")
-      .localCheckpoint() // vocab-sized; feeds the V scalar AND the rejoin
+      .transform(Materialize("textNgramLm.unigrams")) // V scalar + rejoin
     val v = ugc.agg(count(lit(1)).as("vs"))
     val logp = log((col("cbg") + 1).cast("double") /
       (col("cu") + col("vs")).cast("double"))
@@ -3062,17 +3042,12 @@ object TextQueries {
     // xxhash64 replaces the 32-char md5 hex on every shuffle and
     // compare (the shingle-pipeline trade, same accepted 2⁻⁶⁵ collision
     // channel; the oracle groups raw sentences).
-    // §5 TRADE: O(corpus-sentences) rows pinned in executor-local
-    // storage, lineage-fragile under executor loss; recompute loses
-    // (re-reading + re-splitting every document costs more than the
-    // 16-byte rows held) — see textNgramLm's bigram checkpoint note
-    // for the full argument and the staged-layout alternative.
     val sent = documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), "\\. ")).as("sent"))
       .filter(length(col("sent")) > 0)
       .select(col("doc_id"), xxhash64(col("sent")).as("h"),
         length(col("sent")).cast("long").as("len"))
-      .localCheckpoint()
+      .transform(Materialize("dedupLines.sentences"))
     val docFreq = sent.select("doc_id", "h").distinct()
       .groupBy("h").agg(count(lit(1)).as("ndocs"))
     sent.join(docFreq, Seq("h"))
@@ -3112,16 +3087,13 @@ object TextQueries {
     // shingle string was the shuffle key where 8 bytes carry the same
     // decision (fingerprint internal, oracle on raw strings, accepted
     // 2⁻⁶⁵ collision channel).
-    // §5 TRADE: O(corpus-shingles) rows pinned executor-local,
-    // lineage-fragile; recompute loses (full re-tokenize costs more
-    // than the 16-byte rows held) — see textNgramLm's note.
     val sh = documents(s, d)
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"),
         explode(transform(array_distinct(shingles(col("t"))),
           xxhash64(_))).as("sh"))
-      .localCheckpoint()
+      .transform(Materialize("textNovelty.shingles"))
     val first = sh.groupBy("sh").agg(min("doc_id").as("first_doc"))
     sh.join(first, Seq("sh"))
       .groupBy("doc_id")
@@ -3206,7 +3178,7 @@ object TextQueries {
       .select(col("doc_id"), col("n_grams"),
         array_distinct(transform(sequence(lit(1), size(col("hs"))),
           i => array_min(slice(col("hs"), i, lit(4))))).as("fps"))
-      .localCheckpoint()
+      .transform(Materialize("textWinnowing.base"))
     val sel = base.select(col("doc_id"), explode(col("fps")).as("wmin"))
     val df = sel.groupBy("wmin").agg(count(lit(1)).as("nd"))
     val perdoc = sel.join(df, Seq("wmin"))
@@ -3255,7 +3227,7 @@ object TextQueries {
     // materialization (the winnowing lineage-cut discipline).
     val t = documents(s, d)
       .select(col("doc_id"), toks(col("text")).as("t"))
-      .localCheckpoint()
+      .transform(Materialize("dedupSpans.tokens"))
     // Gram digests ride xxhash64 longs, not md5 hex strings (round 14
     // optimization, the ngramPairScores trade): `g` is purely internal —
     // a join/group key — so every shuffle and compare drops from a
@@ -3269,7 +3241,7 @@ object TextQueries {
       .select(col("doc_id"),
         posexplode(ngrams(col("t"), w)).as(Seq("p", "gram")))
       .select(col("doc_id"), col("p"), xxhash64(col("gram")).as("g"))
-      .localCheckpoint()
+      .transform(Materialize("dedupSpans.occurrences"))
     val own = occ.select("doc_id", "g").distinct()
       .groupBy("g")
       .agg(min("doc_id").as("first_doc"), count(lit(1)).as("nd"))
@@ -3277,7 +3249,7 @@ object TextQueries {
     val marked = occ.join(own, Seq("g"))
       .filter(col("doc_id") =!= col("first_doc"))
       .select(col("doc_id"), col("p"))
-      .localCheckpoint()
+      .transform(Materialize("dedupSpans.marked"))
     val hits = marked.groupBy("doc_id")
       .agg(count(lit(1)).as("n_dup_spans"))
     // 1-based token positions covered by any marked span (p is the

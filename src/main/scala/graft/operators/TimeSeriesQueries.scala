@@ -787,7 +787,7 @@ object TimeSeriesQueries {
         (unix_micros(col("ts")) - pmod(unix_micros(col("ts")),
           lit(hourUs))).as("hour_us"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Materialize("denseHourly.hourly"))
     val grid = hourly.groupBy("event_type")
       .agg(min("hour_us").as("h0"), max("hour_us").as("h1"))
       .select(col("event_type"),
@@ -965,7 +965,7 @@ object TimeSeriesQueries {
         (unix_micros(col("ts")) - pmod(unix_micros(col("ts")),
           lit(hourUs))).as("hour_us"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-      .localCheckpoint()
+      .transform(Materialize("tsInterp.hourly"))
     val grid = hourly.groupBy("event_type")
       .agg(min("hour_us").as("h0"), max("hour_us").as("h1"))
       .select(col("event_type"),
@@ -1139,7 +1139,7 @@ object TimeSeriesQueries {
     * uses only ÷ and sqrt on exact operands — bit-identical, so the
     * trend verdict thresholds a shared double. */
   def tsMannKendall(s: SparkSession, d: String): DataFrame = {
-    val g = denseHourly(s, d).localCheckpoint()
+    val g = denseHourly(s, d).transform(Materialize("tsMannKendall.grid"))
     val pairs = g.as("a").join(g.as("b"),
         col("a.event_type") === col("b.event_type") &&
           col("a.hour_us") < col("b.hour_us"))
@@ -1193,7 +1193,7 @@ object TimeSeriesQueries {
         (unix_micros(col("ts")) - pmod(unix_micros(col("ts")),
           lit(hourUs))).as("hour_us"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Materialize("tsXcorr.hourly"))
     val grid = hourly.groupBy()
       .agg(min("hour_us").as("h0"), max("hour_us").as("h1"))
       .select(explode(sequence(col("h0"), col("h1"), lit(hourUs)))
@@ -1205,7 +1205,7 @@ object TimeSeriesQueries {
         .select(col("hour_us"), col("n").as("nb")), Seq("hour_us"), "left")
       .select(col("hour_us"), coalesce(col("na"), lit(0L)).as("a"),
         coalesce(col("nb"), lit(0L)).as("b"))
-      .localCheckpoint()
+      .transform(Materialize("tsXcorr.dense"))
     val pairs = dense
       .select(col("hour_us"), col("a"),
         explode(sequence(lit(-3), lit(3))).as("lag"))
@@ -1281,7 +1281,7 @@ object TimeSeriesQueries {
       .select(col("day"),
         (col("rev") - lag("rev", 1).over(Window.orderBy("day"))).as("d"))
       .filter(col("d").isNotNull)
-      .localCheckpoint()
+      .transform(Materialize("tsVar.deltas"))
     val q = dd.agg(
       count(lit(1)).as("n_days"),
       min("d").as("worst_delta"),
@@ -1505,7 +1505,7 @@ object TimeSeriesQueries {
       .select(expr("unix_micros(o_orderdate) div 86400000000").as("day"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
       .groupBy("day").agg(sum("cents").as("rev_cents"))
-      .localCheckpoint()
+      .transform(Materialize("tsTheilSen.daily"))
     val a = daily.select(col("day").as("d1"), col("rev_cents").as("y1"))
     val b = daily.select(col("day").as("d2"), col("rev_cents").as("y2"))
     val slopes = a.join(b, col("d2") > col("d1"))

@@ -429,7 +429,7 @@ object VersionQueries {
     // moment pass per branch.
     val up = covCellsQ(s, d)
       .select(col("i"), col("j"), (col("cq") / 1e8).as("a"))
-      .localCheckpoint()
+      .transform(Materialize("embedPcaPower.upper"))
     val full = up.union(
       up.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("a")))
@@ -534,10 +534,6 @@ object VersionQueries {
     // execution for the join's other side). One materialization of the
     // skinny (doc_id, hash) frame serves all consumers — the dedupSpans
     // staging discipline. Measured 1.35 → 0.94 s BenchOne median.
-    // §5 TRADE: O(corpus-windows) rows pinned executor-local,
-    // lineage-fragile; recompute loses (full re-tokenize + 8-gram
-    // rebuild costs more than the 16-byte rows held) — see
-    // TextQueries.textNgramLm's checkpoint note for the full argument.
     val w = documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 8)
@@ -545,7 +541,7 @@ object VersionQueries {
         explode(transform(
           array_distinct(TextQueries.ngrams(col("toks"), 8)),
           xxhash64(_))).as("w"))
-      .localCheckpoint()
+      .transform(Materialize("dupSpanFrac.windows"))
     val df = w.groupBy("w").agg(count(lit(1)).as("nd"))
     w.join(df, Seq("w"))
       .groupBy("doc_id")

@@ -27,7 +27,6 @@ object EventStreams {
     * resolved schema and its normalization, keeping batch and stream
     * agreed to the microsecond by construction. */
   def fileStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchShape = graft.Tables.events(s, dir)
     val rawTs = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     val raw = s.readStream

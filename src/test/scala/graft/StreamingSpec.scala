@@ -541,4 +541,19 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .orderBy("window_start_us", "event_type").collect()
     assert(streamed.toSeq === batch.toSeq)
   }
+
+  test("q_stream_tumbling leaves the session conf as it found it, unset " +
+      "keys included") {
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val run = () => SparkEntry.queries("q_stream_tumbling")(spark, sfDir)
+      .collect()
+    run() // the events readers' one-time conf assertions land here
+    spark.conf.unset(noData)
+    val before = spark.conf.getAll
+    run()
+    val after = spark.conf.getAll
+    val changed = (before.keySet ++ after.keySet).toSeq.sorted
+      .filter(k => before.get(k) != after.get(k))
+    assert(changed.isEmpty, s"conf keys changed by the run: $changed")
+  }
 }
