@@ -3,10 +3,22 @@ package graft
 /** Single-query timing/plan harness for iterating on one operator without
   * paying the full bench: `runMain graft.BenchOne <query> [n] [--explain]`
   * times `<query>` n times (default 3, floored at 1) on SPARK_GRAFT_SF_DIR
-  * after one warmup at sf0.001, printing each run and the median. Session
-  * and median come from [[Harness]] so the numbers are comparable to the
-  * full bench by construction. */
+  * after one warmup at sf0.001, printing each run and the medians. Each
+  * run times `count()` (what the full bench times, after Catalyst prunes
+  * every column the count does not need) and, beside it, a full
+  * evaluation through Spark's `noop` sink (every declared column, sort
+  * and aggregate produced, no I/O). A per-query A/B under full
+  * evaluation is therefore one run on each checkout:
+  * `runMain graft.BenchOne q_ts_backtest 3`, then compare the
+  * `median: ... noop` figures. Session and median come from [[Harness]]
+  * so the numbers are comparable to the full bench by construction. */
 object BenchOne {
+  private def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val out = body
+    (out, (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: BenchOne <query>"))
     val n = args.drop(1).find(!_.startsWith("--"))
@@ -17,21 +29,25 @@ object BenchOne {
     // Same per-query task-metric collection as the full bench (round 15):
     // open/close sit outside the timer; the last run's totals print after
     // the median so single-query A/Bs carry measured bytes, not just wall.
+    // They cover the count() run, the one the full bench times.
     val taskMetrics = new QueryTaskMetrics
     spark.sparkContext.addSparkListener(taskMetrics)
     val fn = SparkEntry.queries(name)
     fn(spark, "/root/testdata/sf0.001").count() // warmup: JIT + codegen
-    val times = (1 to n).map { i =>
+    val (counts, fulls) = (1 to n).map { i =>
       taskMetrics.open(name)
-      val t0 = System.nanoTime()
-      val rows = fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (rows, dt) = timed(fn(spark, sfDir).count())
       taskMetrics.close(spark)
-      println(f"[bench-one] $name run $i: $dt%.3f s ($rows rows)")
       Harness.releaseTransient(spark) // full-bench hygiene, same here
-      dt
-    }
-    println(f"[bench-one] $name median: ${Harness.median(times)}%.3f s")
+      val (_, full) = timed(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      Harness.releaseTransient(spark)
+      println(f"[bench-one] $name run $i: $dt%.3f s ($rows rows), " +
+        f"noop $full%.3f s")
+      (dt, full)
+    }.unzip
+    println(f"[bench-one] $name median: ${Harness.median(counts)}%.3f s, " +
+      f"noop ${Harness.median(fulls)}%.3f s")
     println(s"[bench-one] $name task metrics: ${taskMetrics.lineFor(name)}")
     if (explain) {
       // Execute THIS df instance first so the AdaptiveSparkPlan prints

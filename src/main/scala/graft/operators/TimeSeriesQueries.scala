@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -76,12 +76,9 @@ object TimeSeriesQueries {
         |    AS is_anomaly
         |FROM stats WHERE c > 1
         |ORDER BY event_type, hour_us""".stripMargin,
-    // Exact-integer ACF (see [[tsAcf]]): d_t = c·x_t − S₁ is BIGINT, the
-    // centered products sum exactly (HUGEINT here, DECIMAL(38,0) there),
-    // and the single final division is IEEE-identical on both engines.
     // The q_ts_cusum recursive-fold pattern: same dense grid, state =
-    // (ewma, Σ|err|) advanced index-by-index — the IDENTICAL
-    // left-to-right float chain as Spark's aggregate fold, so the MAEs
+    // (ew, se, sn) advanced index-by-index — the IDENTICAL
+    // left-to-right float chain as Spark's struct fold, so the MAEs
     // agree to the last bit before their round(4).
     "q_ts_backtest" ->
       """WITH RECURSIVE hourly AS (
@@ -175,6 +172,9 @@ object TimeSeriesQueries {
         |       WHEN z < -1.96 THEN 'decreasing'
         |       ELSE 'no_trend' END AS trend
         |FROM zz ORDER BY event_type""".stripMargin,
+    // Exact-integer ACF (see [[tsAcf]]): d_t = c·x_t − S₁ is BIGINT, the
+    // centered products sum exactly (HUGEINT here, DECIMAL(38,0) there),
+    // and the single final division is IEEE-identical on both engines.
     "q_ts_acf" ->
       """WITH hourly AS (
         |  SELECT event_type,
@@ -1088,15 +1088,19 @@ object TimeSeriesQueries {
     * level; this scores its out-of-sample skill, the difference between
     * a dashboard and a model).
     *
-    * The full EWMA prefix sequence comes from ONE defined-order array
-    * fold (`aggregate` appending each smoothed value — per-type state
-    * is the O(span) resampled series, never raw events); errors are
-    * positional transforms over the same arrays; both MAE folds are
-    * defined-order. The DuckDB twin is the recursive-CTE fold (the
-    * [[tsCusum]] pattern) + per-row errors; MAEs and MASE are rounded 4
-    * (the twin's error sums are cross-row float aggs). Series under 2
-    * hours are declared out (no error term exists); a constant series
-    * has MASE NULL (naive MAE 0 — the same rounded-guard CASE in both
+    * Both error sums come from ONE defined-order struct fold per type,
+    * O(span): the state (ew, prev, se, sn) is seeded (x₁, x₁, 0, 0) and
+    * each step x₂…x_n scores the forecast before updating it — se +=
+    * |x − ew|, sn += |x − prev|, then ew ← 0.2·x + 0.8·ew — which is
+    * exactly the DuckDB twin's recursive-CTE row (ew, se, sn), so both
+    * engines run the identical IEEE chain. The per-type state is the
+    * O(span) resampled series, never raw events. (A prefix-array EWMA
+    * read through `element_at` inside a per-hour error lambda costs
+    * O(span³): lambdas run interpreted with no subexpression
+    * elimination, so the O(span²) `array_append` fold re-runs for every
+    * hour.) MAEs and MASE are rounded 4. Series under 2 hours are
+    * declared out (no error term exists); a constant series has MASE
+    * NULL (naive MAE 0 — the same rounded-guard CASE in both
     * engines). */
   def tsBacktest(s: SparkSession, d: String): DataFrame = {
     val arr = denseHourly(s, d).groupBy("event_type")
@@ -1105,23 +1109,23 @@ object TimeSeriesQueries {
           struct(col("hour_us").as("h"), col("n").as("v")))).as("hv"))
       .filter(col("n_hours") >= 2)
     val xs = transform(col("hv"), e => e.getField("v").cast("double"))
-    val ew = aggregate(
+    val x1 = element_at(xs, 1)
+    val fold = aggregate(
       slice(xs, lit(2), size(xs) - 1),
-      array(element_at(xs, 1)),
-      (acc, x) => array_append(acc,
-        lit(0.2) * x + lit(0.8) * element_at(acc, -1)))
-    val errE = transform(sequence(lit(2), size(xs)), t =>
-      abs(element_at(xs, t) - element_at(ew, t - 1)))
-    val errN = transform(sequence(lit(2), size(xs)), t =>
-      abs(element_at(xs, t) - element_at(xs, t - 1)))
-    def foldSum(c: Column) = aggregate(c, lit(0.0), (a, x) => a + x)
-    val cnt = (size(xs) - 1).cast("double")
-    val maeE = round(foldSum(errE) / cnt, 4)
-    val maeN = round(foldSum(errN) / cnt, 4)
-    arr.select(col("event_type"), col("n_hours"),
-        maeE.as("mae_ewma"), maeN.as("mae_naive"),
-        when(maeN > 0, round(foldSum(errE) / foldSum(errN), 4))
-          .as("mase"))
+      struct(x1.as("ew"), x1.as("prev"), lit(0.0).as("se"),
+        lit(0.0).as("sn")),
+      (acc, x) => {
+        val ew = acc.getField("ew")
+        struct((lit(0.2) * x + lit(0.8) * ew).as("ew"), x.as("prev"),
+          (acc.getField("se") + abs(x - ew)).as("se"),
+          (acc.getField("sn") + abs(x - acc.getField("prev"))).as("sn"))
+      })
+    val cnt = (col("n_hours") - 1).cast("double")
+    val maeN = round(col("st.sn") / cnt, 4)
+    arr.select(col("event_type"), col("n_hours"), fold.as("st"))
+      .select(col("event_type"), col("n_hours"),
+        round(col("st.se") / cnt, 4).as("mae_ewma"), maeN.as("mae_naive"),
+        when(maeN > 0, round(col("st.se") / col("st.sn"), 4)).as("mase"))
       .orderBy("event_type")
   }
 
@@ -1378,13 +1382,19 @@ object TimeSeriesQueries {
         sort_array(collect_list(
           struct(col("hour_us").as("h"), col("n").as("v")))).as("hv"))
       .filter(col("n_hours") >= 48)
-    val xs = transform(col("hv"), e => e.getField("v").cast("double"))
-    val sum1 = aggregate(slice(xs, lit(1), lit(24)),
-      lit(0.0), (a, x) => a + x)
-    val sum2 = aggregate(slice(xs, lit(25), lit(24)),
-      lit(0.0), (a, x) => a + x)
-    val l0 = sum1 / lit(24.0)
-    val tr0 = (sum2 / lit(24.0) - sum1 / lit(24.0)) / lit(24.0)
+    // xs and the season-1 mean are columns of their own, each referenced
+    // more than once (so CollapseProject keeps them apart): the s0 lambda
+    // reads the mean per slot instead of re-running its fold and the xs
+    // transform under it 24 times.
+    def mean24(from: Int) = aggregate(slice(col("xs"), lit(from), lit(24)),
+      lit(0.0), (a, x) => a + x) / lit(24.0)
+    val seeded = arr
+      .select(col("event_type"), col("n_hours"),
+        transform(col("hv"), e => e.getField("v").cast("double")).as("xs"))
+      .select(col("event_type"), col("n_hours"), col("xs"),
+        mean24(1).as("l0"), mean24(25).as("m2"))
+    val xs = col("xs"); val l0 = col("l0")
+    val tr0 = (col("m2") - l0) / lit(24.0)
     val s0 = transform(slice(xs, lit(1), lit(24)), x => x - l0)
     val init = struct(lit(24L).as("i"), l0.as("l"), tr0.as("tr"),
       s0.as("s"))
@@ -1404,7 +1414,7 @@ object TimeSeriesQueries {
           concat(slice(sv, lit(1), idx - 1), array(sNew),
             slice(sv, idx + 1, lit(24) - idx)).as("s"))
       })
-    arr.select(col("event_type"), col("n_hours"), fold.as("st"))
+    seeded.select(col("event_type"), col("n_hours"), fold.as("st"))
       .select(col("event_type"), col("n_hours"),
         round(col("st.l"), 6).as("level_last"),
         round(col("st.tr"), 6).as("trend_last"),

@@ -576,6 +576,102 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
       b.isNullAt(4), s"constant series: zero MAEs, NULL MASE: $b")
   }
 
+  /** Two irregular hourly count series, 750 and 731 hours: counts 0..7
+    * from a fixed LCG, so about one hour in eight is empty, plus one
+    * empty 12-hour run (zero-filled by the dense grid); first and last
+    * hour are non-empty
+    * so the grid spans the whole array. Returns the events mini table
+    * and the dense series each type resamples to. */
+  private lazy val irregularHourly: (String, Map[String, Array[Double]]) = {
+    import spark.implicits._
+    val h = 3600000000L
+    val h0 = 472222L * h
+    var seed = 12345L
+    def next(): Int = {
+      seed = (seed * 6364136223846793005L + 1442695040888963407L)
+      ((seed >>> 33) % 8).toInt
+    }
+    val series = Seq("a" -> 750, "b" -> 731).map { case (tpe, n) =>
+      tpe -> Array.tabulate(n) { t =>
+        val c = next()
+        if (t == 0 || t == n - 1) c + 1
+        else if (c == 0 || (t >= 100 && t < 112)) 0 else c
+      }
+    }
+    val rows = for {
+      (tpe, xs) <- series
+      (c, t) <- xs.zipWithIndex
+      k <- 0 until c
+    } yield (tpe.hashCode.toLong * 1000000L + t * 10L + k,
+      h0 + t * h + k * 479000000L, tpe)
+    val ev = rows.toDF("event_id", "us", "event_type")
+      .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
+        lit(1L).as("user_id"), col("event_type"),
+        lit(1.0).as("value"), lit("{}").as("props"))
+    (miniDir("irregular_hourly")("events" -> ev),
+      series.map { case (t, xs) => t -> xs.map(_.toDouble) }.toMap)
+  }
+
+  /** Spark's round(x, k) on a double: HALF_UP on the shortest decimal. */
+  private def sparkRound(x: Double, k: Int): Double =
+    BigDecimal(x).setScale(k, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("ts_backtest: struct fold replays the DuckDB twin's (ew, se, sn) " +
+      "recurrence on 720+ irregular hours with zero-filled gaps") {
+    val (dir, series) = irregularHourly
+    val got = graft.operators.TimeSeriesQueries.tsBacktest(spark, dir)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(got.keySet === series.keySet)
+    for ((tpe, xs) <- series) {
+      // The twin's `rec` CTE: (ew, se, sn) seeded (x₁, 0, 0), each step
+      // scoring x against the pre-update ew and the previous x.
+      var ew = xs(0); var se = 0.0; var sn = 0.0
+      for (i <- 1 until xs.length) {
+        se = se + math.abs(xs(i) - ew)
+        sn = sn + math.abs(xs(i) - xs(i - 1))
+        ew = 0.2 * xs(i) + 0.8 * ew
+      }
+      val cnt = (xs.length - 1).toDouble
+      val maeN = sparkRound(sn / cnt, 4)
+      val r = got(tpe)
+      assert(r.getLong(1) === xs.length.toLong, s"$tpe n_hours: $r")
+      assert(r.getDouble(2) === sparkRound(se / cnt, 4), s"$tpe mae_ewma: $r")
+      assert(r.getDouble(3) === maeN, s"$tpe mae_naive: $r")
+      assert(maeN > 0 && r.getDouble(4) === sparkRound(se / sn, 4),
+        s"$tpe mase: $r")
+    }
+  }
+
+  test("q_ts_holtwinters: the fold replays the additive Holt-Winters " +
+      "recurrence on 720+ irregular hours with zero-filled gaps") {
+    val (dir, series) = irregularHourly
+    val got = graft.operators.TimeSeriesQueries.tsHoltWinters(spark, dir)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(got.keySet === series.keySet)
+    for ((tpe, xs) <- series) {
+      val n = xs.length
+      val l0 = xs.take(24).foldLeft(0.0)(_ + _) / 24.0
+      val m2 = xs.slice(24, 48).foldLeft(0.0)(_ + _) / 24.0
+      var l = l0; var tr = (m2 - l0) / 24.0
+      val sv = xs.take(24).map(_ - l0)
+      for (i <- 24 until n) {
+        val x = xs(i); val si = sv(i % 24)
+        val lNew = 0.2 * (x - si) + 0.8 * (l + tr)
+        tr = 0.1 * (lNew - l) + 0.9 * tr
+        sv(i % 24) = 0.3 * (x - lNew) + 0.7 * si
+        l = lNew
+      }
+      val r = got(tpe)
+      assert(r.getLong(1) === n.toLong, s"$tpe n_hours: $r")
+      assert(r.getDouble(2) === sparkRound(l, 6), s"$tpe level_last: $r")
+      assert(r.getDouble(3) === sparkRound(tr, 6), s"$tpe trend_last: $r")
+      assert(r.getDouble(4) === sparkRound(l + tr + sv(n % 24), 6),
+        s"$tpe forecast_1: $r")
+      assert(r.getDouble(5) === sparkRound(sv.max - sv.min, 6),
+        s"$tpe season_amp: $r")
+    }
+  }
+
   test("bootstrap CI brackets the replicate mean and is deterministic") {
     val q = graft.operators.StatsQueries.aggBootstrapCi(spark, sfDir)
     val r1 = q.collect().head

@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  HigherOrderFunction, LambdaFunction, NamedLambdaVariable}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fleet-wide plan guard (SURVEY §4 / the 100 TB mandate): EVERY declared
   * query's settled physical plan is checked for the failure modes that
   * sink large-scale jobs — an accidental cartesian product, or a
-  * nested-loop join that wasn't an explicit, bounded-side decision.
+  * nested-loop join that wasn't an explicit, bounded-side decision —
+  * and, in the optimized plan, for a higher-order function re-run per
+  * element of an enclosing lambda although it reads none of that
+  * lambda's variables (see [[loopInvariantHofs]]).
   * Individual plan-shape assertions live in PlanShapeSpec; this is the
   * regression net that catches a future query (or a Catalyst behavior
   * change) silently degenerating.
@@ -91,6 +97,27 @@ class PlanGuardSpec extends AnyFunSuite with SparkFixture {
     "q_split_temporal" // 1-row (min, max) ts-bounds broadcast (cross,
                       // the q_event_dau pattern)
   )
+
+  /** Higher-order functions nested inside a lambda that read no lambda
+    * variable bound outside themselves: loop-invariant folds and
+    * transforms. HOF lambdas run interpreted, with no subexpression
+    * elimination, so each such HOF re-runs for every element the
+    * enclosing HOF visits (an O(span) fold inside a per-hour lambda is
+    * O(span²) per row). Hoist it into a column of its own, referenced
+    * more than once so CollapseProject does not inline it back. */
+  private def loopInvariantHofs(plan: LogicalPlan): Seq[Expression] = {
+    def free(h: Expression) =
+      h.collect { case v: NamedLambdaVariable => v.exprId }.toSet --
+        h.collect { case l: LambdaFunction => l.arguments.map(_.exprId) }
+          .flatten
+    plan.collectWithSubqueries { case p => p.expressions }.flatten
+      .flatMap(_.collect { case l: LambdaFunction => l.function })
+      .flatMap(_.collect {
+        case h: HigherOrderFunction if free(h).isEmpty => h
+      })
+      .distinct
+  }
+
   // q_dedup_embed / q_dedup_cc are intentionally ABSENT: since the blocked
   // pair-join rewrite their exact pair scan is a gid equi-join and must
   // never regress to a nested loop.
@@ -109,6 +136,10 @@ class PlanGuardSpec extends AnyFunSuite with SparkFixture {
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$name picked a nested-loop join (not on the allowlist):\n$plan")
       }
+      val invariant = loopInvariantHofs(df.queryExecution.optimizedPlan)
+      assert(invariant.isEmpty,
+        s"$name re-runs loop-invariant higher-order functions inside a " +
+          s"lambda:\n${invariant.map(_.sql.take(300)).mkString("\n")}")
     }
   }
 }
