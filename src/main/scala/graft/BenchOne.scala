@@ -10,13 +10,21 @@ package graft
   * and aggregate produced, no I/O). A per-query A/B under full
   * evaluation is therefore one run on each checkout:
   * `runMain graft.BenchOne q_ts_backtest 3`, then compare the
-  * `median: ... noop` figures. Session and median come from [[Harness]]
-  * so the numbers are comparable to the full bench by construction. */
+  * `median: ... noop` figures. Each timing carries the process CPU
+  * seconds it burned beside its wall seconds: on a shared host wall time
+  * moves with steal and neighbours, CPU much less. Session and median
+  * come from [[Harness]] so the numbers are comparable to the full bench
+  * by construction. */
 object BenchOne {
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
+  private val os = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** (result, wall s, process CPU s) of `body`. */
+  private def timed[T](body: => T): (T, Double, Double) = {
+    val (t0, c0) = (System.nanoTime(), os.getProcessCpuTime)
     val out = body
-    (out, (System.nanoTime() - t0) / 1e9)
+    (out, (System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - c0) / 1e9)
   }
 
   def main(args: Array[String]): Unit = {
@@ -34,20 +42,22 @@ object BenchOne {
     spark.sparkContext.addSparkListener(taskMetrics)
     val fn = SparkEntry.queries(name)
     fn(spark, "/root/testdata/sf0.001").count() // warmup: JIT + codegen
-    val (counts, fulls) = (1 to n).map { i =>
+    val runs = (1 to n).map { i =>
       taskMetrics.open(name)
-      val (rows, dt) = timed(fn(spark, sfDir).count())
+      val (rows, dt, dtCpu) = timed(fn(spark, sfDir).count())
       taskMetrics.close(spark)
       Harness.releaseTransient(spark) // full-bench hygiene, same here
-      val (_, full) = timed(
+      val (_, full, fullCpu) = timed(
         fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       Harness.releaseTransient(spark)
-      println(f"[bench-one] $name run $i: $dt%.3f s ($rows rows), " +
-        f"noop $full%.3f s")
-      (dt, full)
-    }.unzip
-    println(f"[bench-one] $name median: ${Harness.median(counts)}%.3f s, " +
-      f"noop ${Harness.median(fulls)}%.3f s")
+      println(f"[bench-one] $name run $i: $dt%.3f s ($rows rows, " +
+        f"cpu $dtCpu%.3f s), noop $full%.3f s (cpu $fullCpu%.3f s)")
+      Seq(dt, dtCpu, full, fullCpu)
+    }
+    val Seq(count, countCpu, noop, noopCpu) =
+      runs.transpose.map(Harness.median)
+    println(f"[bench-one] $name median: $count%.3f s (cpu $countCpu%.3f s), " +
+      f"noop $noop%.3f s (cpu $noopCpu%.3f s)")
     println(s"[bench-one] $name task metrics: ${taskMetrics.lineFor(name)}")
     if (explain) {
       // Execute THIS df instance first so the AdaptiveSparkPlan prints

@@ -58,7 +58,7 @@ object RankOps {
   /** `a div b` for non-negative longs as a Catalyst `IntegralDivide` —
     * exact integer division (a Column-API `/` would detour through
     * IEEE doubles). */
-  private def idiv(a: Column, b: Column): Column =
+  private[operators] def idiv(a: Column, b: Column): Column =
     call_function("div", a.cast("long"), b.cast("long"))
 
   /** Shared phase-1 prologue of every two-phase operator here: fail

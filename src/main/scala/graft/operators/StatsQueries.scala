@@ -2462,32 +2462,44 @@ object StatsQueries {
     * lines, ranks see any monotone link and shrug off outliers/skew.
     *
     * Exactness: tie-averaged ranks ride in [[aggMannWhitney]]'s INTEGER
-    * HALF-UNITS — the doubled average rank 2·rank() + ct − 1 (rank() =
-    * 1 + count-less-than; ct = tie-group size from a per-value count
-    * window) is always integral — then Pearson over the integer doubled
-    * ranks via the exact decimal(38,0) moment recipe (the constant
-    * factor 2 cancels in the correlation), one closed-form IEEE tree,
-    * rounded 6.
+    * HALF-UNITS — the doubled average rank 2·#less + ct + 1 (ct = tie
+    * group size) is always integral — then Pearson over the integer
+    * doubled ranks (the constant factor 2 cancels in the correlation)
+    * from exact integer moments, one closed-form IEEE tree, rounded 6.
     *
-    * Scale shape: the two per-group rank windows are order-statistics-
-    * mandated (the [[aggGini]] cost class — a total order per group per
-    * variable is the price of exact ranks); everything after is ONE
-    * map-side-combined moment agg. */
+    * Scale shape: the corpus rows are sorted once.
+    *  - x ranks come from the per-(flag, quantity) histogram, at most
+    *    |flags|·|quantities| rows at any scale: a running count over it
+    *    gives each cell's doubled rank, and a broadcast equi-join puts
+    *    that rank on the corpus rows.
+    *  - y ranks come from ONE window spec: rank() = 1 + #less and the
+    *    default RANGE frame's count = #less + #ties, so their sum is the
+    *    doubled average rank with no per-value count window.
+    *  - the five moments are [[exactSum]]s: two long sums per row
+    *    instead of a per-row decimal(38,0) buffer.
+    * The y window partitions on encode(flag), an injective key that is
+    * NOT the grouping column, so the per-flag moment aggregate is planned
+    * partial → exchange → final. The final orderBy's range exchange runs
+    * its child stage twice (once to sample bounds); with the window
+    * behind that exchange the second run reads three aggregated rows
+    * instead of re-sorting the corpus. */
   def aggSpearman(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = lineitem(s, d).select(
       col("l_returnflag").as("f"),
       round(col("l_quantity"), 0).cast("long").as("q"),
       round(col("l_extendedprice") * 100, 0).cast("long").as("p"))
-    val r = v.select(col("f"),
-      (lit(2L) * rank().over(Window.partitionBy("f").orderBy("q"))
-        + count(lit(1)).over(Window.partitionBy("f", "q")) - lit(1L))
-        .as("rx"),
-      (lit(2L) * rank().over(Window.partitionBy("f").orderBy("p"))
-        + count(lit(1)).over(Window.partitionBy("f", "p")) - lit(1L))
-        .as("ry"))
-    def sd(c: org.apache.spark.sql.Column, n: String) =
-      sum(c.cast(dec)).cast("double").as(n)
+    val below = Window.partitionBy("f").orderBy("q")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val hx = v.groupBy("f", "q").agg(count(lit(1)).as("ct"))
+      .select(col("f").as("hf"), col("q").as("hq"),
+        (lit(2L) * coalesce(sum("ct").over(below), lit(0L))
+          + col("ct") + lit(1L)).as("rx"))
+    val wy = Window.partitionBy(encode(col("f"), "UTF-8")).orderBy("p")
+    val r = v
+      .join(broadcast(hx), col("f") <=> col("hf") && col("q") <=> col("hq"))
+      .select(col("f"), col("rx"),
+        (rank().over(wy) + count(lit(1)).over(wy)).as("ry"))
+    def sd(c: Column, n: String) = exactSum(c).cast("double").as(n)
     val g = r.groupBy("f").agg(
       count(lit(1)).as("n"), count(lit(1)).cast("double").as("c"),
       sd(col("rx"), "sx"), sd(col("ry"), "sy"),
@@ -2507,6 +2519,21 @@ object StatsQueries {
               * sqrt(col("c") * col("syy") - col("sy") * col("sy"))), 6))
           .as("spearman_qty_price"))
       .orderBy("l_returnflag")
+  }
+
+  /** Exact sum of a LONG column as decimal(38,0), equal to
+    * `sum(cast(c AS decimal(38,0)))` but carried in two long partial
+    * sums instead of a per-row decimal buffer: c = hi·2³¹ + lo with
+    * hi = c >> 31 (arithmetic shift, so the identity holds for negatives
+    * in two's complement) and lo = c & (2³¹−1) ∈ [0, 2³¹). Since
+    * −2³² ≤ hi < 2³², neither long sum overflows below 2³¹ + 1 rows per
+    * group, and past that ANSI mode throws rather than wraps. The limbs
+    * combine once per group. A NULL row drops out of both sums, so an
+    * all-NULL group sums to NULL. */
+  def exactSum(c: Column): Column = {
+    val dec = "decimal(38,0)"
+    sum(shiftright(c, 31)).cast(dec) * lit(1L << 31) +
+      sum(c.bitwiseAND(lit((1L << 31) - 1))).cast(dec)
   }
 
   /** Welch two-sample t-test of price cents, return flag R vs N — the

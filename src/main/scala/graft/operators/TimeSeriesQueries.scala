@@ -302,7 +302,8 @@ object TimeSeriesQueries {
         |ORDER BY event_type, dow, hour""".stripMargin,
 
     // Same hourly cents series, same IGNORE NULLS bracketing windows,
-    // same exact-integer-input interpolation expression. The grid spans
+    // same exact-integer interpolation and HALF_UP integer rounding
+    // (`//` truncates like Spark's `div`). The grid spans
     // min..max OBSERVED hour per type, so h0/h1 are observed and every
     // gap is interior — hp/hn are never NULL.
     "q_ts_interp" ->
@@ -334,15 +335,21 @@ object TimeSeriesQueries {
         |    wp AS (PARTITION BY event_type ORDER BY hour_us
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
         |    wn AS (PARTITION BY event_type ORDER BY hour_us
-        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
+        |gap AS (
+        |  SELECT event_type, hour_us, cents, cp, cn, hp,
+        |    CASE WHEN hn = hp THEN 1 ELSE (hn - hp) // 3600000000 END AS dh
+        |  FROM brk),
+        |frac AS (
+        |  SELECT event_type, hour_us, cents,
+        |    cp * dh + (cn - cp) * ((hour_us - hp) // 3600000000) AS num,
+        |    100 * dh AS den
+        |  FROM gap)
         |SELECT event_type, hour_us, cents IS NOT NULL AS is_observed,
-        |  round(CASE WHEN hn = hp THEN CAST(cp AS DOUBLE)
-        |    ELSE CAST(cp AS DOUBLE)
-        |      + (CAST(cn AS DOUBLE) - CAST(cp AS DOUBLE))
-        |        * (CAST(hour_us - hp AS DOUBLE)
-        |           / CAST(hn - hp AS DOUBLE)) END / 100, 4)
-        |    AS value_interp
-        |FROM brk ORDER BY event_type, hour_us""".stripMargin,
+        |  CAST(CAST(CASE WHEN num < 0 THEN -1 ELSE 1 END
+        |      * ((20000 * abs(num) + den) // (2 * den)) AS DECIMAL(18,0))
+        |    * 0.0001 AS DOUBLE) AS value_interp
+        |FROM frac ORDER BY event_type, hour_us""".stripMargin,
 
     // Same densified grid, same 25-row trailing frame, same dyadic
     // quartiles (quarter-fraction positions over integer counts) and
@@ -951,10 +958,12 @@ object TimeSeriesQueries {
     *
     * The series is exact BIGINT cents per observed hour; bracketing
     * neighbors come from IGNORE NULLS running windows (last preceding /
-    * first following observed point), and the interpolation expression
-    * takes only exact integers (cents, epoch-µs hours) into one shared
-    * IEEE tree — for an observed row hp = hn = h and the CASE collapses
-    * it to its own value, so one formula serves both. The grid spans
+    * first following observed point), and the interpolation is exact
+    * integer arithmetic (cents, whole hours) rounded HALF_UP to 4 places
+    * by integer division — for an observed row hp = hn = h and the
+    * formula collapses to its own value, so one formula serves both. A
+    * double `round(x, 4)` would not do: Spark and DuckDB break a .xxxx5
+    * tie of the same double differently. The grid spans
     * min..max observed hour per type, so every gap is interior and the
     * brackets never miss. Scale: corpus touched once by the hourly agg;
     * grid/windows run on the resampled frame (types × span hours). */
@@ -982,15 +991,23 @@ object TimeSeriesQueries {
       .withColumn("hp", last(obsHour, ignoreNulls = true).over(wp))
       .withColumn("cn", first(col("cents"), ignoreNulls = true).over(wn))
       .withColumn("hn", first(obsHour, ignoreNulls = true).over(wn))
+    // value_interp = num / den in exact integers: hours since hp over
+    // the gap's hours dh (1 for an observed row, where hp = hn = h), so
+    // num = cp·dh + (cn − cp)·(h − hp) and den = 100·dh. One sign-aware
+    // integer division rounds it HALF_UP to 4 places and one exact
+    // decimal → double cast emits it, so no engine rounds a double and a
+    // .xxxx5 tie cannot split Spark from the twin.
+    import RankOps.idiv
+    val dh = when(col("hn") === col("hp"), lit(1L))
+      .otherwise(idiv(col("hn") - col("hp"), lit(hourUs)))
+    val num = col("cp") * dh +
+      (col("cn") - col("cp")) * idiv(col("hour_us") - col("hp"), lit(hourUs))
+    val den = lit(100L) * dh
+    val q4 = idiv(lit(20000L) * abs(num) + den, lit(2L) * den)
     brk.select(col("event_type"), col("hour_us"),
         col("cents").isNotNull.as("is_observed"),
-        round(
-          when(col("hn") === col("hp"), col("cp").cast("double"))
-            .otherwise(col("cp").cast("double")
-              + (col("cn").cast("double") - col("cp").cast("double"))
-                * ((col("hour_us") - col("hp")).cast("double")
-                  / (col("hn") - col("hp")).cast("double")))
-          / 100, 4).as("value_interp"))
+        (when(num < 0, -q4).otherwise(q4).cast("decimal(18,0)")
+          * lit(BigDecimal("0.0001"))).cast("double").as("value_interp"))
       .orderBy("event_type", "hour_us")
   }
 

@@ -221,9 +221,10 @@ object VersionQueries {
     * (row-local float→double casts, bit-identical in both engines).
     *
     * Scale: no pair enumeration (naive AUC compares P·N pairs) — one
-    * global rank sort per scorer, which is exactly a distributed
-    * range-partitioned sort; ties resolved by a (scorer, score) window
-    * that reuses the same sort order. */
+    * rank sort per scorer and ONE window spec: rank() = 1 + #less and
+    * the default RANGE frame's count = #less + #ties, so their sum is the
+    * doubled average rank. Peers are the sort's equal keys, so −0.0 and
+    * 0.0 tie, as do all NaNs. */
   def evalAuc(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
     def scored(name: String, c: Column) = e.select(
@@ -232,10 +233,8 @@ object VersionQueries {
     val both = scored("dim1", element_at(col("embedding"), 1))
       .unionByName(scored("dim2", element_at(col("embedding"), 2)))
     val wr = Window.partitionBy("scorer").orderBy("score")
-    val wt = Window.partitionBy("scorer", "score")
     val ranked = both
-      .withColumn("r2",
-        lit(2L) * rank().over(wr) + count(lit(1)).over(wt) - lit(1L))
+      .withColumn("r2", rank().over(wr) + count(lit(1)).over(wr))
     ranked.groupBy("scorer")
       .agg(
         count_if(col("pos")).as("p"),

@@ -349,6 +349,82 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
       s"got: ${rows.toSeq}")
   }
 
+  /** Doubled average rank of each key among `ks`: 2·#less + #ties + 1,
+    * under `ord` (the engines' sort order, which decides the ties). */
+  private def halfRanks[K](ks: Seq[K])(implicit ord: Ordering[K]): Seq[BigInt] =
+    ks.map(k => BigInt(2 * ks.count(ord.lt(_, k)) + ks.count(ord.equiv(_, k)) + 1))
+
+  test("q_agg_spearman: heavy ties, NULL keys and a constant-quantity " +
+      "flag replay the exact moments in BigInt") {
+    import spark.implicits._
+    // A: ties in both columns; N: the same plus NULL quantities and
+    // prices (NULLs sort first and tie with each other); R: constant
+    // quantity, so its x-rank variance is 0 and the guard emits NULL.
+    val rng = new scala.util.Random(23L)
+    val rows = (0 until 1200).map { i =>
+      val f = Seq("A", "N", "R")(i % 3)
+      val q = if (f == "R") Some(7.0)
+        else if (f == "N" && i % 41 == 1) None
+        else Some((rng.nextInt(6) + 1).toDouble)
+      val p = if (f == "N" && i % 37 == 1) None
+        else Some((rng.nextInt(60) + 1) * 0.25 + 100)
+      (i.toLong, f, q, p)
+    }
+    val li = rows.toDF("l_orderkey", "l_returnflag", "l_quantity",
+      "l_extendedprice")
+    val dir = miniDir("spearman")("lineitem" -> li)
+    val got = graft.operators.StatsQueries.aggSpearman(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
+    val exp = rows.groupBy(_._2).toSeq.sortBy(_._1).map { case (f, rs) =>
+      val rx = halfRanks(rs.map(_._3.map(x => sparkRound(x, 0).toLong)))
+      val ry = halfRanks(rs.map(_._4.map(x => sparkRound(x * 100, 0).toLong)))
+      def dsum(xs: Seq[BigInt]) = xs.sum.toDouble
+      val (c, sx, sy) = (rs.size.toDouble, dsum(rx), dsum(ry))
+      val sxx = dsum(rx.map(x => x * x))
+      val syy = dsum(ry.map(y => y * y))
+      val sxy = dsum(rx.zip(ry).map { case (x, y) => x * y })
+      val rho = if (c * sxx > sx * sx && c * syy > sy * sy)
+        Some(sparkRound((c * sxy - sx * sy)
+          / (math.sqrt(c * sxx - sx * sx) * math.sqrt(c * syy - sy * sy)), 6))
+        else None
+      (f, rs.size.toLong, rho)
+    }
+    assert(got === exp)
+    assert(exp.map(_._3.isDefined) === Seq(true, true, false))
+  }
+
+  test("q_eval_auc: −0.0/0.0 and NaN scores tie as one group each") {
+    import spark.implicits._
+    // dim1 holds signed zeros and NaNs: the sort treats −0.0 = 0.0 and
+    // NaN = NaN (above +∞), and the average ranks must follow that.
+    val vals = Seq(-0.0f, 0.0f, Float.NaN, 1.0f, -1.0f, Float.PositiveInfinity)
+    val rng = new scala.util.Random(5L)
+    val rows = (0 until 300).map { i =>
+      (i.toLong, Seq(vals(rng.nextInt(vals.size)), rng.nextInt(4).toFloat),
+        rng.nextInt(5))
+    }
+    val emb = rows.toDF("vec_id", "embedding", "label")
+    val dir = miniDir("auc_ties")("embeddings" -> emb)
+    val got = graft.operators.VersionQueries.evalAuc(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getDouble(3)).toMap
+    // Doubles compared by the sort's order: total order with NaN last
+    // and the two zeros equal (java.lang.Double.compare would split them).
+    val ord: Ordering[Double] = (a: Double, b: Double) =>
+      if (a.isNaN || b.isNaN) java.lang.Boolean.compare(a.isNaN, b.isNaN)
+      else java.lang.Double.compare(a + 0.0, b + 0.0)
+    for ((scorer, j) <- Seq("dim1" -> 0, "dim2" -> 1)) {
+      val scores = rows.map(_._2(j).toDouble)
+      val pos = rows.map(_._3 % 2 == 1)
+      val r2 = halfRanks(scores)(ord)
+      val p = pos.count(identity).toLong
+      val n = rows.size - p
+      val rp2 = r2.zip(pos).collect { case (r, true) => r }.sum
+      val auc = sparkRound((rp2 - p * (p + 1)).toDouble / (2.0 * p * n), 6)
+      assert(got(scorer) === auc, s"$scorer")
+    }
+  }
+
   test("q_select_head: crossing row kept, post-half rows cut, 1-doc lang") {
     import spark.implicits._
     // lang 'xx': doc 1 carries 60% of the mass (crossing row — kept),

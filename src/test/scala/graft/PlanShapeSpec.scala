@@ -535,6 +535,47 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(exchanges <= 2, s"$exchanges exchanges:\n$plan")
   }
 
+  test("q_agg_spearman sorts its rows once and keeps windows out of the " +
+      "final sort's stage") {
+    // Logical: one window over the per-(flag, quantity) histogram (x
+    // ranks) and one corpus window (y ranks) — not a rank and a count
+    // window per variable. Physical: the final orderBy's range exchange
+    // runs its child stage a second time to sample bounds, so that stage
+    // must end at an exchange below the moment aggregate, never reach
+    // into the corpus window.
+    import org.apache.spark.sql.catalyst.plans.logical.{
+      Aggregate, Window => LWindow}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.{
+      Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = StatsQueries.aggSpearman(spark, sfDir)
+    val ws = df.queryExecution.optimizedPlan.collect { case w: LWindow => w }
+    assert(ws.size === 2, s"${ws.size} logical windows (want 2)")
+    val overHist = ws.filter(w => w.child.exists(_.isInstanceOf[Aggregate]) &&
+      !w.child.exists(_.isInstanceOf[LWindow]))
+    assert(overHist.size === 1, s"no window over the histogram:\n$ws")
+    df.collect() // run so AQE settles on the final plan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case q: QueryStageExec => nodes(q.plan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val ranges = nodes(executed(df)).collect {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.size === 1, s"${ranges.size} range exchanges (want 1)")
+    def stage(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+      case _: Exchange | _: QueryStageExec => Nil
+      case c => c +: stage(c)
+    }
+    val inStage = stage(ranges.head)
+    assert(!inStage.exists(_.isInstanceOf[WindowExec]),
+      s"window inside the final sort's stage:\n${ranges.head}")
+  }
+
   test("q_ts_acf reads the corpus once: final plan is checkpoint-fed") {
     // The hourly aggregate's two consumers (bounds, zero-fill join)
     // differ by a null filter, defeating ReuseExchange — without the
@@ -915,11 +956,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       LogicalPlan, Window => LWindow}
     // Exemptions are PER WINDOW INDEX, not per query (round-11 review):
     // a query gaining a SECOND, genuinely corpus-scaled window must
-    // still fail by name — e.g. q_agg_spearman's window #0 stays swept.
+    // still fail by name — e.g. q_agg_spearman's histogram window #1
+    // stays swept; only its corpus y-rank window #0 is exempt.
     val allow: Map[String, Set[Int]] = Map(
       "q_agg_gini" -> Set(0, 1, 2), // exact order stats (aggGini class)
-      "q_agg_spearman" -> Set(1, 2, 3), // exact tie-averaged ranks
-      "q_eval_auc" -> Set(1), // rank-sum over bounded eval set
+      "q_agg_spearman" -> Set(0), // exact tie-averaged ranks
+      "q_eval_auc" -> Set(0), // rank-sum over bounded eval set
       "q_eval_ndcg" -> Set(0, 1), // ranked-list metric, bounded eval
       "q_text_pack" -> Set(0)) // shard-bounded at 4096 by arithmetic
     // (q_window_ntile_range left this list in round 11: its range frame

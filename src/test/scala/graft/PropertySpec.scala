@@ -659,6 +659,96 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("exactSum equals sum(cast(x AS decimal(38,0))) on random, " +
+      "negative and ±2⁶² longs, NULLs and an all-NULL group") {
+    // The two-limb identity c = (c >> 31)·2³¹ + (c & (2³¹−1)) holds in
+    // two's complement for every long, so the limb sums must reproduce
+    // the decimal sum exactly, value and type, NULL groups included.
+    import spark.implicits._
+    import org.apache.spark.sql.types.DecimalType
+    val edge = Seq(0L, 1L, -1L, (1L << 31) - 1, 1L << 31, -(1L << 31),
+      -(1L << 31) - 1, 1L << 62, -(1L << 62), Long.MaxValue, Long.MinValue)
+    val rng = new scala.util.Random(31L)
+    val rows = (0 until 3000).map { i =>
+      val g = i % 8
+      val v =
+        if (g == 7 || rng.nextInt(10) == 0) None // group 7: all NULL
+        else Some(rng.nextInt(4) match {
+          case 0 => edge(rng.nextInt(edge.size))
+          case 1 => rng.nextLong()
+          case 2 => rng.nextLong() >> rng.nextInt(64) // every magnitude
+          case _ => rng.nextInt(2001).toLong - 1000 // small, tie-heavy
+        })
+      (g, v)
+    }
+    val df = rows.toDF("g", "x")
+    val got = df.groupBy("g").agg(
+      StatsQueries.exactSum(col("x")).as("e"),
+      sum(col("x").cast("decimal(38,0)")).as("d"))
+    assert(got.schema("e").dataType === DecimalType(38, 0))
+    val byG = got.collect().map(r => r.getInt(0) ->
+      (Option(r.getDecimal(1)), Option(r.getDecimal(2)))).toMap
+    assert(byG.keySet === (0 until 8).toSet)
+    for ((g, (e, d)) <- byG) {
+      val exp = rows.collect { case (`g`, Some(x)) => BigInt(x) }
+      if (exp.isEmpty) assert(e.isEmpty && d.isEmpty, s"group $g: $e / $d")
+      else {
+        assert(e.map(x => BigInt(x.toBigIntegerExact)) === Some(exp.sum),
+          s"group $g: $e")
+        assert(e === d, s"group $g: exactSum $e vs decimal sum $d")
+      }
+    }
+    // A global aggregate over no rows is NULL on both sides as well.
+    val none = df.filter(lit(false)).agg(StatsQueries.exactSum(col("x")))
+      .collect().head
+    assert(none.isNullAt(0))
+  }
+
+  test("half-rank law: rank() + count() over one ordered RANGE window " +
+      "equals 2·rank() + count() over (partition, value) − 1 on tie-heavy " +
+      "long and double keys (−0.0/0.0, NaN, NULL)") {
+    // The one-spec doubled average rank q_agg_spearman and q_eval_auc
+    // use: rank() = 1 + #less and the default frame's count = #less +
+    // #ties. Ties are the sort's peers, which must be exactly the groups
+    // the per-value partition formed: −0.0 with 0.0, NaN with NaN, NULL
+    // with NULL.
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val doubles = Seq(-0.0, 0.0, Double.NaN, 1.5, -1.5,
+      Double.PositiveInfinity, Double.NegativeInfinity, 2.0)
+    val rng = new scala.util.Random(17L)
+    val rows = (0 until 1500).map { i =>
+      val p = rng.nextInt(3)
+      val l = if (rng.nextInt(25) == 0) None else Some(rng.nextInt(9) - 4L)
+      val d = if (rng.nextInt(25) == 0) None
+        else Some(doubles(rng.nextInt(doubles.size)))
+      (i.toLong, p, l, d)
+    }
+    val df = rows.toDF("id", "p", "l", "d")
+    for (k <- Seq("l", "d")) {
+      val w = Window.partitionBy("p").orderBy(k)
+      val one = rank().over(w) + count(lit(1)).over(w)
+      val two = lit(2L) * rank().over(w) +
+        count(lit(1)).over(Window.partitionBy("p", k)) - lit(1L)
+      val got = df.select(col("id"), one.as("one"), two.as("two")).collect()
+      assert(got.length === rows.size)
+      val bad = got.filter(r => r.getLong(1) != r.getLong(2))
+      assert(bad.isEmpty, s"$k: ${bad.take(5).mkString(", ")}")
+      // The law holds on the sort's tie groups, not on a coarser split:
+      // −0.0/0.0 share one value and every NaN ties every other NaN.
+      if (k == "d") {
+        val byId = got.map(r => r.getLong(0) -> r.getLong(1)).toMap
+        for (pp <- 0 until 3) {
+          def ranks(f: Double => Boolean) = rows.collect {
+            case (id, `pp`, _, Some(x)) if f(x) => byId(id)
+          }.toSet
+          assert(ranks(x => x == 0.0).size === 1, s"p=$pp: ±0.0 split")
+          assert(ranks(_.isNaN).size === 1, s"p=$pp: NaN split")
+        }
+      }
+    }
+  }
+
   test("count-min sketch never undercounts (one-sided error contract)") {
     // CMS cells only ever ADD colliding mass, so min-over-rows is ≥ the
     // true count for every item — the defining one-sided guarantee.
