@@ -109,26 +109,24 @@ object AuditQueries {
     * cannot range-skip" (hash-bucketed layouts trade range-skip for
     * point-lookup pruning — exactly what this fixture shows).
     *
-    * The staged layout is written ONCE (fingerprint-guarded, the
-    * [[graft.sources.Staging]] lifecycle): lineitem keys hash-bucketed
-    * into `bucket=k%8` partition dirs with each bucket repartitioned to
-    * a single task, so the dir holds exactly one file per bucket and
-    * file grain == bucket grain — which is what lets the file-level
-    * stats (grouped by the REAL `input_file_name()`, not the bucket
-    * column) be oracled from the logical table: the twin recomputes the
-    * same stats from the k%8 rule. A real deployment points this at any
-    * partitioned table and reads the same audit, minus the oracle.
+    * The staged layout is written ONCE ([[graft.sources.Staging.once]]):
+    * lineitem keys hash-bucketed into `bucket=k%8` partition dirs with
+    * each bucket repartitioned to a single task, so the dir holds
+    * exactly one file per bucket and file grain == bucket grain — which
+    * is what lets the file-level stats (grouped by the REAL
+    * `input_file_name()`, not the bucket column) be oracled from the
+    * logical table: the twin recomputes the same stats from the k%8
+    * rule. A real deployment points this at any partitioned table and
+    * reads the same audit, minus the oracle.
     */
   def dqLayout(s: SparkSession, d: String): DataFrame = {
     val dir = graft.sources.SourceQueries.scratch(d, "lineitem_bucketed")
-    val fp = graft.sources.Staging.fingerprint(s,
-      Seq(s"$d/lineitem.parquet"))
-    if (!graft.sources.Staging.readMarker(s, dir).contains(fp)) {
+    graft.sources.Staging.once(s, dir, "v1", Seq(s"$d/lineitem.parquet")) {
       lineitem(s, d).select(col("l_orderkey"),
           pmod(col("l_orderkey"), lit(8)).as("bucket"))
         .repartition(8, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-      graft.sources.Staging.markStaged(s, dir, fp)
+      Nil
     }
     // Explicit schema (not inference): an EMPTY corpus stages a dir with
     // zero data files, where schema inference throws but a declared

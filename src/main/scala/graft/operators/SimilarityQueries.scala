@@ -1072,23 +1072,22 @@ object SimilarityQueries {
     * corpus (the lshLayout/signature-store discipline — this is its
     * exact-edge sibling); every analysis then reads the store.
     *
-    * Bucketed ×32 by v1 through the shared stage-once protocol
-    * ([[graft.sources.BucketedLayout.ensureBucketed]]: listing
-    * fingerprint + bucket spec recorded, marker written LAST, DDL-only
-    * re-register when a later JVM finds the layout staged; any corpus
-    * regeneration restages). The consumers' values are identical by
-    * construction — the store holds the scan's own output — so every
-    * oracle hash-match is unaffected (verified at three SFs), and the
-    * wire cost of the scan is paid exactly once per corpus generation.
+    * Bucketed ×32 by v1 through
+    * [[graft.sources.BucketedLayout.ensureBucketed]]. The consumers'
+    * values are identical by construction — the store holds the scan's
+    * own output — so every oracle hash-match is unaffected (verified at
+    * three SFs), and the wire cost of the scan is paid exactly once per
+    * corpus generation.
     * PlanShapeSpec's hash-joins-only guard pins [[embedPairsScan]] (the
     * computation that runs at staging time). */
   private[operators] def embedPairs(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{BucketedLayout, SourceQueries}
     val pairsT = s"graft_embed_pairs_${SourceQueries.sfName(d)}"
-    BucketedLayout.ensureBucketed(s, embedPairsScan(s, d), pairsT, "v1",
-      buckets = 32,
-      path = s"${SourceQueries.scratch(d, "pairs_layout")}/pairs",
-      sources = Seq(s"$d/embeddings.parquet"))
+    val root = SourceQueries.scratch(d, "pairs_layout")
+    BucketedLayout.ensureBucketed(s, root, "v1",
+      Seq(s"$d/embeddings.parquet"),
+      BucketedLayout.Table(pairsT, "v1", 32, s"$root/pairs")(
+        () => embedPairsScan(s, d)))
     s.table(pairsT)
   }
 
@@ -1172,44 +1171,22 @@ object SimilarityQueries {
     *    join (self-join for pair mining, delta×base for the ingest gate)
     *    reads co-located buckets with no Exchange on the band side.
     *
-    * Same stage-once discipline as TextQueries.shingleLayout: one marker
-    * for both tables, written last, fingerprinting the source corpus
-    * listing — regeneration restages; band derivation reads the staged
-    * docs table (one scan, no re-tokenize). */
+    * One stage for both tables, as in TextQueries.shingleLayout: the
+    * bands derive from the WRITTEN docs table (one scan, no
+    * re-tokenize), so a per-table stage could pair fresh bands with a
+    * stale docs table. */
   private[operators] def lshLayout(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import graft.sources.{BucketedLayout, SourceQueries, Staging}
+    import graft.sources.{BucketedLayout, SourceQueries}
     val root = SourceQueries.scratch(d, "lsh_layout")
     val sf = SourceQueries.sfName(d)
     val (docsT, bandsT) = (s"graft_lsh_docs_$sf", s"graft_lsh_bands_$sf")
-    val (docsPath, bandsPath) = (s"$root/docs", s"$root/bands")
-    val spec = "v1|" +
-      Staging.fingerprint(s, Seq(s"$d/documents.parquet"))
-    def register(table: String, ddl: String, key: String,
-        path: String): Unit = {
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      s.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO 32 BUCKETS " +
-        s"LOCATION '$path'")
-    }
-    Staging.readMarker(s, root).map(_.split("\n", -1)) match {
-      case Some(Array(sp, docsDdl, bandsDdl)) if sp == spec =>
-        if (!s.catalog.tableExists(docsT))
-          register(docsT, docsDdl, "doc_id", docsPath)
-        if (!s.catalog.tableExists(bandsT))
-          register(bandsT, bandsDdl, "sig", bandsPath)
-      case _ =>
-        BucketedLayout.dropWithLocation(s, docsT, root)
-        s.sql(s"DROP TABLE IF EXISTS $bandsT")
-        BucketedLayout.writeBucketed(docSets(documents(s, d)), docsT,
-          "doc_id", 32, Some(docsPath))
-        BucketedLayout.writeBucketed(
-          bandRowsOf(s.table(docsT)), bandsT,
-          "sig", 32, Some(bandsPath))
-        Staging.markStaged(s, root, spec +
-          "\n" + s.table(docsT).schema.toDDL +
-          "\n" + s.table(bandsT).schema.toDDL)
-    }
+    BucketedLayout.ensureBucketed(s, root, "v2",
+      Seq(s"$d/documents.parquet"),
+      BucketedLayout.Table(docsT, "doc_id", 32, s"$root/docs")(
+        () => docSets(documents(s, d))),
+      BucketedLayout.Table(bandsT, "sig", 32, s"$root/bands")(
+        () => bandRowsOf(s.table(docsT))))
     (s.table(docsT), s.table(bandsT))
   }
 
@@ -1272,19 +1249,19 @@ object SimilarityQueries {
     * exactly the delta pipeline q_stream_lsh_ingest executes), so every
     * analysis reads the store instead of re-mining the corpus.
     *
-    * Same stage-once protocol as embedPairs (BucketedLayout: listing
-    * fingerprint + bucket spec in the marker, written LAST; any corpus
-    * regeneration restages; DDL-only re-register across JVMs). The
-    * store holds [[lshPairScan]]'s own exact counts (d1, d2, common, n1,
-    * n2), so a stricter consumer cut is the same exact rule. Bucketed
-    * ×32 by d1 to mirror the embedPairs layout. */
+    * Staged like embedPairs, through
+    * [[graft.sources.BucketedLayout.ensureBucketed]]. The store holds
+    * [[lshPairScan]]'s own exact counts (d1, d2, common, n1, n2), so a
+    * stricter consumer cut is the same exact rule. Bucketed ×32 by d1
+    * to mirror the embedPairs layout. */
   private[operators] def lshPairs(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{BucketedLayout, SourceQueries}
     val pairsT = s"graft_lsh_pairs_${SourceQueries.sfName(d)}"
-    BucketedLayout.ensureBucketed(s, lshPairScan(s, d), pairsT, "d1",
-      buckets = 32,
-      path = s"${SourceQueries.scratch(d, "lsh_pair_counts")}/pairs",
-      sources = Seq(s"$d/documents.parquet"))
+    val root = SourceQueries.scratch(d, "lsh_pair_counts")
+    BucketedLayout.ensureBucketed(s, root, "v1",
+      Seq(s"$d/documents.parquet"),
+      BucketedLayout.Table(pairsT, "d1", 32, s"$root/pairs")(
+        () => lshPairScan(s, d)))
     s.table(pairsT)
   }
 

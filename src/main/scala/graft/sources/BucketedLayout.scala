@@ -30,55 +30,39 @@ object BucketedLayout {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
-  /** Drop `table` from the catalog AND clear its directory: the in-memory
-    * catalog dies with the JVM but table directories persist, and a
-    * create-from-scratch over a stale location fails or double-counts. */
-  def dropWithLocation(s: SparkSession, table: String, dir: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  /** One bucketed table of a staged layout: `name` over the files at
+    * `path`, bucketed and sorted by `key` into `buckets`. `data` runs
+    * only on a restage. */
+  final case class Table(name: String, key: String, buckets: Int,
+      path: String)(val data: () => DataFrame)
 
-  /** Stage-once bucketed layout: ensure `table` is registered in the
-    * catalog over a bucketed layout at `path`, (re)writing the DATA only
-    * if the layout has never been staged for the current inputs.
+  /** Stage-once bucketed layout under `root` (the [[Staging.once]]
+    * protocol): ensure every table in `tables` is registered in the
+    * catalog over its bucketed files, writing DATA only when the layout
+    * has not been staged for `version` over the current `sources`.
     *
-    * This is the production semantics the scaladoc above promises:
-    * bucketing is an INGEST-time cost, paid once per dataset — the
-    * steady-state read path re-registers the external table over the
-    * existing bucket files (DDL only, no data pass; Spark recovers
-    * bucket ids from the file names) when the catalog died with a
-    * previous JVM. Staleness is guarded two ways: the `_GRAFT_STAGED`
-    * marker is written LAST (a killed mid-write stage is restaged, never
-    * reused) and it records a fingerprint (name, length, modtime) of the
-    * source files plus the bucket spec — any input regeneration or spec
-    * change forces a rewrite. Delete the layout dir to re-pay the write.
-    */
-  def ensureBucketed(s: SparkSession, df: => DataFrame, table: String,
-      key: String, buckets: Int, path: String,
-      sources: Seq[String]): Unit = {
-    val spec = s"$key|$buckets|${Staging.fingerprint(s, sources)}"
-    val current = Staging.readMarker(s, path).collect {
-      case txt if txt.indexOf('\n') >= 0 =>
-        val i = txt.indexOf('\n')
-        (txt.take(i), txt.drop(i + 1))
+    * Bucketing is an INGEST-time cost, paid once per dataset. When the
+    * stage is valid, any table the catalog lost (it dies with the JVM,
+    * the files do not) is re-registered from its recorded DDL: catalog
+    * entry only, no data pass (Spark recovers bucket ids from the file
+    * names). A restage drops and writes the tables in list order, so a
+    * later table's `data` may read an earlier one back through the
+    * catalog. The bucket spec is recorded beside `version`, so changing
+    * a key or a bucket count restages too. */
+  def ensureBucketed(s: SparkSession, root: String, version: String,
+      sources: Seq[String], tables: Table*): Unit = {
+    val spec = tables.map(t => s"${t.key}/${t.buckets}").mkString(",")
+    val ddls = Staging.once(s, root, s"$version|$spec", sources) {
+      tables.foreach { t =>
+        s.sql(s"DROP TABLE IF EXISTS ${t.name}")
+        writeBucketed(t.data(), t.name, t.key, t.buckets, Some(t.path))
+      }
+      tables.map(t => s.table(t.name).schema.toDDL)
     }
-    current match {
-      case Some((sp, _)) if sp == spec &&
-          s.catalog.tableExists(table) => // hot: catalog + layout valid
-      case Some((sp, ddl)) if sp == spec =>
-        // layout staged by an earlier session: register the external
-        // bucketed table over it — catalog entry only, no data pass.
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        s.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-          s"LOCATION '$path'")
-      case _ =>
-        dropWithLocation(s, table, path)
-        writeBucketed(df, table, key, buckets, Some(path))
-        Staging.markStaged(s, path,
-          spec + "\n" + s.table(table).schema.toDDL)
+    for ((t, ddl) <- tables.zip(ddls) if !s.catalog.tableExists(t.name)) {
+      s.sql(s"CREATE TABLE ${t.name} ($ddl) USING parquet " +
+        s"CLUSTERED BY (${t.key}) SORTED BY (${t.key}) " +
+        s"INTO ${t.buckets} BUCKETS LOCATION '${t.path}'")
     }
   }
 

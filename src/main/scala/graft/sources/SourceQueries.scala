@@ -92,16 +92,21 @@ object SourceQueries {
         |ORDER BY lang, source""".stripMargin
   )
 
-  /** Scratch dir keyed by scale-factor dir name: warmup (sf0.001) and the
+  /** Scratch dir keyed by [[sfName]]: warmup (sf0.001) and the
     * timed/verified run (sf0.01/0.1) never collide. Shared by every
     * query that stages files (stream replays, foreachBatch sink) so a
     * root/keying change happens in exactly one place. */
   private[graft] def scratch(d: String, name: String): String =
-    s"/tmp/graft-io/${new java.io.File(d).getName}/$name"
+    s"/tmp/graft-io/${sfName(d)}/$name"
 
-  /** Scale-factor dir name as an identifier fragment — for artifacts
-    * keyed by SF in namespaces that only accept [A-Za-z0-9_] (table
-    * names; test miniDirs carry hyphens/timestamps, not just sf dots). */
+  /** The one key a corpus dir's derived artifacts are named by: its dir
+    * name as an identifier fragment, since catalog table names accept
+    * only [A-Za-z0-9_] (test miniDirs carry hyphens/timestamps, not just
+    * sf dots). Scratch roots and staged table names both derive from
+    * it, so two dirs that differ only in a sanitized character (`kp.1`,
+    * `kp_1`) share one root AND one set of tables, and the stage's
+    * listing fingerprint, which records each source's full path,
+    * restages rather than serving one dir the other's layout. */
   private[graft] def sfName(d: String): String =
     new java.io.File(d).getName.replaceAll("[^A-Za-z0-9_]", "_")
 
@@ -242,13 +247,12 @@ object SourceQueries {
     val dbDir = scratch(d, "jdbc_derby")
     val url = s"jdbc:derby:$dbDir;create=true"
     val props = new java.util.Properties()
-    // Stage-once (fingerprint marker in a SIBLING dir — Derby owns its
-    // own directory's contents): the operational DB is a fixture derived
+    // Stage-once (staged in a SIBLING dir — Derby owns its own
+    // directory's contents): the operational DB is a fixture derived
     // from customer.parquet; the measured operator is the partitioned
     // read below. A previous JVM's unclean exit is fine — Derby replays
     // its transaction log on boot.
-    val fp = Staging.fingerprint(s, Seq(s"$d/customer.parquet"))
-    if (!Staging.readMarker(s, s"${dbDir}_mark").contains(fp)) {
+    Staging.once(s, s"${dbDir}_mark", "v1", Seq(s"$d/customer.parquet")) {
       val p = new org.apache.hadoop.fs.Path(dbDir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       // Derby keeps a database BOOTED in the JVM after its connections
@@ -264,7 +268,7 @@ object SourceQueries {
       Tables.customer(s, d)
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
         .write.mode("overwrite").jdbc(url, "customer_jdbc", props)
-      Staging.markStaged(s, s"${dbDir}_mark", fp)
+      Nil
     }
     s.read
       .option("partitionColumn", "c_custkey")
@@ -309,25 +313,20 @@ object SourceQueries {
     * prune at listing time. */
   def scanBinaryFile(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(d, "docs_bin")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // Stage-once (fingerprint-guarded, marker written last): the .bin
-    // corpus is a FIXTURE derived from documents.parquet — the measured
-    // operator is the binaryFile read below, and a media corpus isn't
-    // re-materialized per scan. A killed mid-stage run or a regenerated
-    // source forces a restage.
-    val fp = Staging.fingerprint(s, Seq(s"$d/documents.parquet"))
-    if (!Staging.readMarker(s, dir).contains(fp)) {
-      stageBinaryCorpus(s, d, dir, p, fs)
-      Staging.markStaged(s, dir, fp)
+    // Stage-once: the .bin corpus is a FIXTURE derived from
+    // documents.parquet — the measured operator is the binaryFile read
+    // below, and a media corpus isn't re-materialized per scan.
+    Staging.once(s, dir, "v1", Seq(s"$d/documents.parquet")) {
+      stageBinaryCorpus(s, d, dir)
+      Nil
     }
     readBinaryCorpus(s, d, dir)
   }
 
-  private def stageBinaryCorpus(s: SparkSession, d: String, dir: String,
-      p: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    if (fs.exists(p)) fs.delete(p, true)
+  private def stageBinaryCorpus(s: SparkSession, d: String,
+      dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(p)
     // Executor-side fan-out is only correct when every executor and the
     // driver's listing see ONE filesystem. A `file:` scratch path on a

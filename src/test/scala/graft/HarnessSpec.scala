@@ -135,4 +135,31 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
         (hits ++ shared).mkString("\n"))
     assert(sites.nonEmpty, "the sweep found no Materialize site")
   }
+
+  test("every staged layout goes through the Staging seam: no marker " +
+      "read or write elsewhere in src/main") {
+    // The stage-once protocol (marker format, validity check, delete →
+    // build → marker-last) has one owner, sources/Staging.scala; a
+    // hand-rolled copy elsewhere is how a layout goes stale unnoticed.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"sweep must run from the repo root")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val protocol = Seq("readMarker(", "markStaged(", "MarkerName",
+      "_GRAFT_STAGED")
+    val hits = files(root).filter(_.getName != "Staging.scala").flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.collect {
+        case (l, i) if protocol.exists(l.contains) =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      "stage-once protocol outside graft.sources.Staging:\n" +
+        hits.mkString("\n"))
+    assert(files(root).exists(_.getName == "Staging.scala"),
+      "the sweep found no Staging seam")
+  }
 }

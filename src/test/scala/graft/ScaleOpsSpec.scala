@@ -127,9 +127,10 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     fs.delete(new Path(base), true)
     spark.sql("DROP TABLE IF EXISTS t_stage_once")
     graft.Tables.nation(spark, sfDir).write.parquet(src)
-    def stage(): Unit = graft.sources.BucketedLayout.ensureBucketed(spark,
-      spark.read.parquet(src), "t_stage_once", "n_nationkey", 4, loc,
-      Seq(src))
+    def stage(version: String = "v1"): Unit =
+      BucketedLayout.ensureBucketed(spark, loc, version, Seq(src),
+        BucketedLayout.Table("t_stage_once", "n_nationkey", 4, loc)(
+          () => spark.read.parquet(src)))
     stage()
     val marker = new Path(loc, "_GRAFT_STAGED")
     val t0 = fs.getFileStatus(marker).getModificationTime
@@ -144,13 +145,68 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     assert(fs.getFileStatus(marker).getModificationTime == t0,
       "register path rewrote the data")
     assert(spark.table("t_stage_once").count() == rows)
+    // Staging computation changed (version bumped), inputs unchanged:
+    // the layout restages, and the new version's stage is then reused.
+    stage("v2")
+    assert(graft.sources.Staging.readMarker(spark, loc)
+      .exists(_.startsWith("v2|")),
+      "a version bump served the old version's layout")
+    val t1 = fs.getFileStatus(marker).getModificationTime
+    assert(spark.table("t_stage_once").count() == rows)
+    stage("v2")
+    assert(fs.getFileStatus(marker).getModificationTime == t1,
+      "the bumped version restaged twice")
     // Input regenerated: fingerprint mismatch forces a full restage.
     graft.Tables.nation(spark, sfDir).limit(10)
       .write.mode("overwrite").parquet(src)
-    stage()
+    stage("v2")
     assert(spark.table("t_stage_once").count() == 10,
       "stale layout served after its input changed")
     spark.sql("DROP TABLE IF EXISTS t_stage_once")
+    fs.delete(new Path(base), true)
+  }
+
+  test("two-table staged layout re-registers only the lost table from " +
+      "the marker's DDL") {
+    // The lshLayout/shingleLayout shape: one stage, two tables, the
+    // second derived from the WRITTEN first. A catalog that lost one
+    // table gets it back from the recorded DDL — no data pass, so
+    // neither table's `data` runs and the marker is not rewritten.
+    import org.apache.hadoop.fs.Path
+    val base = "/tmp/graft-test-twotable"
+    val src = s"$base/src.parquet"
+    val fs = new Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(base), true)
+    def dropTables(): Unit = Seq("t_two_a", "t_two_b")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    dropTables()
+    graft.Tables.nation(spark, sfDir).write.parquet(src)
+    var built = 0
+    def stage(): Unit = BucketedLayout.ensureBucketed(spark, s"$base/layout",
+      "v1", Seq(src),
+      BucketedLayout.Table("t_two_a", "n_nationkey", 4, s"$base/layout/a") {
+        () => built += 1; spark.read.parquet(src) },
+      BucketedLayout.Table("t_two_b", "n_regionkey", 2, s"$base/layout/b") {
+        () => built += 1
+          spark.table("t_two_a").select("n_regionkey", "n_nationkey") })
+    stage()
+    assert(built === 2)
+    val marker = new Path(s"$base/layout", "_GRAFT_STAGED")
+    val t0 = fs.getFileStatus(marker).getModificationTime
+    val b = spark.table("t_two_b").orderBy("n_nationkey").collect().toSeq
+    spark.sql("DROP TABLE t_two_b")
+    stage()
+    assert(built === 2, "re-registering a lost table re-ran a build")
+    assert(fs.getFileStatus(marker).getModificationTime == t0,
+      "re-registering a lost table rewrote the marker")
+    assert(spark.table("t_two_b").orderBy("n_nationkey").collect().toSeq
+      === b)
+    val spec = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("t_two_b")).bucketSpec
+    assert(spec.map(s => (s.numBuckets, s.bucketColumnNames)) ===
+      Some((2, Seq("n_regionkey"))))
+    dropTables()
     fs.delete(new Path(base), true)
   }
 
@@ -383,8 +439,8 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def layoutFiles: Seq[String] = {
-      val cold = new java.io.File("/tmp/graft-io/graft-stageonce/" +
-        "ngram_layout/cold")
+      val cold = new java.io.File(graft.sources.SourceQueries
+        .scratch(dir, "ngram_layout") + "/cold")
       Option(cold.list()).getOrElse(Array.empty[String]).toSeq.sorted
         .filter(_.endsWith(".parquet"))
     }
@@ -406,6 +462,27 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     assert(n2 === 0L,
       "restage missed: result still reflects the replaced corpus")
     assert(layoutFiles !== staged, "layout files unchanged after restage")
+  }
+
+  test("two corpus dirs that share a layout key never serve each " +
+      "other's layout") {
+    // `kp.1` and `kp_1` map to the same table names (the key sanitizes
+    // the dot), so they must also share one scratch root: the stage's
+    // listing fingerprint, which records each source's full path, then
+    // restages on every switch instead of serving A the layout B staged.
+    import spark.implicits._
+    import graft.operators.TextQueries
+    val base = java.nio.file.Files.createTempDirectory("graft-layoutkey")
+    val (a, b) = (s"$base/p/kp.1", s"$base/q/kp_1")
+    (0L -> "a b c d e f" :: 1L -> "a b c d e f" :: 2L -> "p q r s t u" :: Nil)
+      .toDF("doc_id", "text").coalesce(1)
+      .write.parquet(s"$a/documents.parquet")
+    (0L -> "a b c d e f" :: 1L -> "zz yy xx ww vv uu" :: Nil)
+      .toDF("doc_id", "text").coalesce(1)
+      .write.parquet(s"$b/documents.parquet")
+    val answers = Seq(a, b, a).map(TextQueries.dedupNgram(spark, _).count())
+    assert(answers === Seq(1L, 0L, 1L),
+      "A's third call was answered from B's staged layout")
   }
 
   test("k-means wire is linear in corpus size: broadcast centroids, " +

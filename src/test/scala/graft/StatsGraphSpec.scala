@@ -331,7 +331,7 @@ class StatsGraphSpec extends AnyFunSuite with SparkFixture {
 
   test("partitioned sink read-back prunes partitions on the lang filter") {
     SourceQueries.sinkPartitioned(spark, sfDir).collect() // writes the layout
-    val dir = s"/tmp/graft-io/${new java.io.File(sfDir).getName}/documents_by_lang"
+    val dir = SourceQueries.scratch(sfDir, "documents_by_lang")
     val pruned = spark.read.parquet(dir).filter(col("lang") === "en")
     pruned.collect()
     val scan = pruned.queryExecution.executedPlan.toString
