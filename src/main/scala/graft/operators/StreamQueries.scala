@@ -3,10 +3,10 @@ package graft.operators
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
 import graft.streaming.EventStreams
 
@@ -324,12 +324,7 @@ object StreamQueries {
     * more than once in a session). */
   private val seq = new AtomicInteger
 
-  /** Checkpoint root for the bounded-replay harness: tmpfs when available.
-    * Every micro-batch commit fsyncs offset/commit logs plus one state
-    * delta file per shuffle partition; on the throwaway replay checkpoint
-    * that I/O is pure harness overhead (a production deployment points
-    * `checkpointLocation` at durable storage — that knob stays with the
-    * caller). */
+  /** Where [[drain]]'s throwaway checkpoints live: tmpfs when available. */
   private val ckptRoot: String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) shm.toString
@@ -347,10 +342,43 @@ object StreamQueries {
     * any fan-out. */
   private val replayStateParts = "4"
 
-  /** Run an unbounded frame to completion: AvailableNow trigger → memory
-    * sink → return the materialized table. Temp checkpoint, self
-    * terminating — the streaming analogue of an action. */
-  /** @param finalNoDataBatch whether the trailing NO-DATA micro-batch
+  /** The bounded-replay seam: run a configured stream writer to
+    * completion — the streaming analogue of an action. Every declared
+    * stream query ends here, through [[runToTable]] or a `foreachBatch`
+    * sink.
+    *
+    *   - `Trigger.AvailableNow` processes everything the source holds at
+    *     start (in `maxFilesPerTrigger`-sized batches where the source
+    *     sets one) and then terminates by itself, so `awaitTermination`
+    *     returns with the replay done.
+    *   - The checkpoint is throwaway: a fresh directory per run, deleted
+    *     on the way out. Exactly-once comes from that checkpoint plus an
+    *     idempotent sink; nothing resumes from it, and a fresh one keeps
+    *     a rerun from skipping input an earlier run already committed.
+    *   - It lives on tmpfs when available ([[ckptRoot]]): every
+    *     micro-batch commit fsyncs offset/commit logs plus one state
+    *     delta file per shuffle partition, and on a checkpoint nobody
+    *     reads that I/O is pure harness overhead. A production
+    *     deployment points `checkpointLocation` at durable storage (the
+    *     `graft.streaming` pipelines take it from the caller).
+    *
+    * Sets no session conf: a `foreachBatch` body runs at the session's
+    * own shuffle partitions. */
+  private def drain(w: DataStreamWriter[Row]): Unit = {
+    val ckpt = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
+    try w.option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    finally deleteRecursively(ckpt)
+  }
+
+  /** Run an unbounded frame through [[drain]] into a memory sink, at
+    * [[replayStateParts]] state partitions, and return the materialized
+    * table.
+    *
+    * @param finalNoDataBatch whether the trailing NO-DATA micro-batch
     *   (the one AvailableNow runs after the last data batch so stateful
     *   operators can act on the advanced watermark) runs. Keep the
     *   default for any query whose OUTPUT depends on that batch — the
@@ -359,9 +387,9 @@ object StreamQueries {
     *   Pass false only when every output row is emitted on arrival and
     *   the final batch would merely evict state into a checkpoint this
     *   harness deletes on the next line — profiled on the INNER
-    *   interval join (round 11, StreamProf): the no-data batch is
-    *   ~0.7 s of a 2.4 s replay (state-store commit ×4 stores ×4
-    *   partitions + plan re-execution) spent evicting state nobody
+    *   interval join's per-batch progress (round 11): the no-data
+    *   batch is ~0.7 s of a 2.4 s replay (state-store commit ×4 stores
+    *   ×4 partitions + plan re-execution) spent evicting state nobody
     *   will ever read. A production continuous deployment keeps
     *   no-data batches ON — eviction is what bounds its state; this
     *   knob is strictly a bounded-replay-harness economy. */
@@ -369,21 +397,13 @@ object StreamQueries {
       finalNoDataBatch: Boolean = true): DataFrame = {
     val s = df.sparkSession
     val name = s"graft_stream_${seq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
-    try withConf(s,
+    withConf(s,
         "spark.sql.shuffle.partitions" -> replayStateParts,
         "spark.sql.streaming.noDataMicroBatches.enabled" ->
           finalNoDataBatch.toString) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(ckpt)
+      drain(df.writeStream.format("memory").queryName(name)
+        .outputMode(mode))
+    }
     // `table` resolves the view to the sink's plan EAGERLY (Dataset
     // construction analyzes), so the catalog entry can be dropped here:
     // the returned DataFrame owns the materialized rows and releases
@@ -391,7 +411,7 @@ object StreamQueries {
     // leaked one driver-held result table for the session's lifetime —
     // 22 streaming queries × 5 bench sweeps ≈ 110 tables (up to 16 k
     // rows each) by pass 3, the round-7 pass-over-pass drift.
-    val out = df.sparkSession.table(name)
+    val out = s.table(name)
     s.catalog.dropTempView(name)
     out
   }
@@ -423,6 +443,16 @@ object StreamQueries {
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
       finally walk.close()
     } catch { case _: java.io.IOException => () }
+
+  /** Empty a sink directory before a replay writes into it: the scratch
+    * tree outlives the JVM, so a previous run's files would otherwise be
+    * read back with this run's. */
+  private def freshDir(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    fs.mkdirs(p)
+  }
 
   /** The reference's intended pipeline (SURVEY §0.1): Kafka-shaped source →
     * elementwise transform → sink. Events are wrapped into the Kafka record
@@ -484,65 +514,23 @@ object StreamQueries {
     * batch boundaries — which is what makes the query fully oracled
     * against the one-shot batch aggregate. Two event-time-half
     * micro-batches (modtime-pinned, `maxFilesPerTrigger=1`) exercise a
-    * real cross-batch merge, not a degenerate single batch.
-    *
-    * Scale shape: per batch, one map-side-combined agg over the DELTA
-    * plus one full-outer equi-join against the serving table keyed by
-    * user_id — cost scales with delta + |table|, never the history; at
-    * 100 TB the serving table is bucketed by the merge key
-    * (q_join_bucketed's layout) so only the delta shuffles. Versioned
-    * dirs stand in for a table format's transactional commit. */
+    * real cross-batch merge, not a degenerate single batch. Scale
+    * shape: [[versionedMerge]]. */
   def streamMergeSink(s: SparkSession, d: String): DataFrame = {
-    val tbl = graft.sources.SourceQueries.scratch(d, "merge_table")
     val ev = graft.Tables.events(s, d)
-    val base = stagedReplaySlices(s, d, "merge_stream",
-      Seq(s"$d/events.parquet"))(eventsMidpointSlices(ev))
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(tbl), true)
-    val stream = s.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/b*")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val up = batch.groupBy("user_id").agg(
-            count(lit(1)).as("n_events"),
-            sum(col("value")).as("sum_value"),
-            max(struct(col("ts").as("ts"), col("event_id").as("id"),
-              col("value").as("v"))).as("last"))
-          val merged =
-            if (batchId == 0) up
-            else {
-              val prev = batch.sparkSession.read
-                .parquet(s"$tbl/v=${batchId - 1}")
-              prev.as("t").join(up.as("u"), Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("t.n_events"), lit(0L)) +
-                    coalesce(col("u.n_events"), lit(0L))).as("n_events"),
-                  (coalesce(col("t.sum_value"), lit(0.0)) +
-                    coalesce(col("u.sum_value"), lit(0.0))).as("sum_value"),
-                  when(col("u.last").isNull, col("t.last"))
-                    .when(col("t.last").isNull, col("u.last"))
-                    .when(col("t.last") > col("u.last"), col("t.last"))
-                    .otherwise(col("u.last")).as("last"))
-            }
-          merged.write.mode("overwrite").parquet(s"$tbl/v=$batchId")
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(ckpt)
-    val latest = fs.listStatus(new org.apache.hadoop.fs.Path(tbl))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.drop(2).toLong).max
-    s.read.parquet(s"$tbl/v=$latest")
+    val stream = stagedReplaySlices(s, d, "merge_stream",
+      Seq(s"$d/events.parquet"), ev.schema)(
+      eventsMidpointSlices(ev, col("ts") < _, col("ts") >= _))
+    versionedMerge(s, stream,
+      graft.sources.SourceQueries.scratch(d, "merge_table"),
+      Seq("n_events" -> plus(lit(0L)), "sum_value" -> plus(lit(0.0)),
+        "last" -> greater)) {
+      _.groupBy("user_id").agg(
+        count(lit(1)).as("n_events"),
+        sum(col("value")).as("sum_value"),
+        max(struct(col("ts").as("ts"), col("event_id").as("id"),
+          col("value").as("v"))).as("last"))
+    }
       .select(col("user_id"), col("n_events"),
         round(col("sum_value"), 2).as("sum_value"),
         unix_micros(col("last.ts")).as("last_ts_us"),
@@ -561,69 +549,77 @@ object StreamQueries {
     * q_cdc_snapshot's exact batch oracle. Tombstones (`error`) are kept
     * IN the state and filtered only at read time: a tombstone must
     * survive merges so a later batch's earlier-versioned upsert cannot
-    * resurrect the key (the classic CDC compaction subtlety).
-    *
-    * Scale shape: per batch, one map-side-combined agg over the DELTA +
-    * one full-outer equi-join against the snapshot keyed by user_id —
-    * cost scales with delta + |table|; at 100 TB the snapshot is
-    * bucketed by the key so only the delta shuffles (q_join_bucketed's
-    * layout), and the versioned dirs stand in for a table format's
-    * transactional commit. */
+    * resurrect the key (the classic CDC compaction subtlety). Scale
+    * shape: [[versionedMerge]]. */
   def streamCdcApply(s: SparkSession, d: String): DataFrame = {
-    val tbl = graft.sources.SourceQueries.scratch(d, "cdc_table")
     val ev = graft.Tables.events(s, d)
-    val base = stagedReplaySlices(s, d, "cdc_stream",
-      Seq(s"$d/events.parquet"))(eventsMidpointSlices(ev))
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(tbl), true)
-    val stream = s.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/b*")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val up = batch.groupBy("user_id").agg(
-            max(struct(
-              unix_micros(col("ts")).as("v1"), col("event_id").as("v2"),
-              col("event_type").as("t"), col("value").as("v"))).as("m"),
-            count(lit(1)).as("n_versions"))
-          val merged =
-            if (batchId == 0) up
-            else {
-              val prev = batch.sparkSession.read
-                .parquet(s"$tbl/v=${batchId - 1}")
-              prev.as("t").join(up.as("u"), Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  when(col("u.m").isNull, col("t.m"))
-                    .when(col("t.m").isNull, col("u.m"))
-                    .when(col("t.m") > col("u.m"), col("t.m"))
-                    .otherwise(col("u.m")).as("m"),
-                  (coalesce(col("t.n_versions"), lit(0L)) +
-                    coalesce(col("u.n_versions"), lit(0L)))
-                    .as("n_versions"))
-            }
-          merged.write.mode("overwrite").parquet(s"$tbl/v=$batchId")
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(ckpt)
-    val latest = fs.listStatus(new org.apache.hadoop.fs.Path(tbl))
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.drop(2).toLong).max
-    s.read.parquet(s"$tbl/v=$latest")
+    val stream = stagedReplaySlices(s, d, "cdc_stream",
+      Seq(s"$d/events.parquet"), ev.schema)(
+      eventsMidpointSlices(ev, col("ts") < _, col("ts") >= _))
+    versionedMerge(s, stream,
+      graft.sources.SourceQueries.scratch(d, "cdc_table"),
+      Seq("m" -> greater, "n_versions" -> plus(lit(0L)))) {
+      _.groupBy("user_id").agg(
+        max(struct(
+          unix_micros(col("ts")).as("v1"), col("event_id").as("v2"),
+          col("event_type").as("t"), col("value").as("v"))).as("m"),
+        count(lit(1)).as("n_versions"))
+    }
       .filter(col("m.t") =!= "error")
       .select(col("user_id"), col("m.t").as("last_type"),
         col("m.v").as("last_value"), col("n_versions"))
       .orderBy("user_id")
   }
+
+  /** The versioned MERGE both serving-table replays share: clear `tbl`,
+    * then per micro-batch reduce the delta to its per-user `partial`
+    * and commit it as `tbl/v=<batchId>` — batch 0 as is, every later
+    * batch as the FULL OUTER join of `v=<batchId-1>` with the partial
+    * on user_id, each `combine` column merged by its function of (table
+    * side, delta side). Returns the latest committed version.
+    *
+    * Scale shape: per batch, one map-side-combined agg over the DELTA
+    * plus one full-outer equi-join against the table keyed by user_id —
+    * cost scales with delta + |table|, never the history; at 100 TB the
+    * table is bucketed by the merge key (q_join_bucketed's layout) so
+    * only the delta shuffles, where a union + re-aggregate would
+    * shuffle the whole table every batch. Versioned dirs stand in for a
+    * table format's transactional commit. The combines must be
+    * associative for the final state to be batch-boundary-independent,
+    * which is what lets the oracles compare against one-shot batch
+    * aggregates. */
+  private def versionedMerge(s: SparkSession, stream: DataFrame, tbl: String,
+      combine: Seq[(String, (Column, Column) => Column)])(
+      partial: DataFrame => DataFrame): DataFrame = {
+    freshDir(s, tbl)
+    drain(stream.writeStream.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        val up = partial(batch)
+        val merged =
+          if (batchId == 0) up
+          else batch.sparkSession.read.parquet(s"$tbl/v=${batchId - 1}")
+            .as("t").join(up.as("u"), Seq("user_id"), "full_outer")
+            .select(col("user_id") +: combine.map { case (c, f) =>
+              f(col(s"t.$c"), col(s"u.$c")).as(c) }: _*)
+        merged.write.mode("overwrite").parquet(s"$tbl/v=$batchId")
+        ()
+    })
+    val p = new org.apache.hadoop.fs.Path(tbl)
+    val latest = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(p).map(_.getPath.getName).filter(_.startsWith("v="))
+      .map(_.drop(2).toLong).max
+    s.read.parquet(s"$tbl/v=$latest")
+  }
+
+  /** Merge combine for counts and sums: a side the key is missing from
+    * contributes `zero`. */
+  private def plus(zero: Column)(t: Column, u: Column): Column =
+    coalesce(t, zero) + coalesce(u, zero)
+
+  /** Merge combine for argmax structs: a null side yields the other
+    * side, else the greater struct (lexicographic on its fields). */
+  private def greater(t: Column, u: Column): Column =
+    when(u.isNull, t).when(t.isNull, u).when(t > u, t).otherwise(u)
 
   /** Streaming near-dup ingest gate — the production shape the staged
     * LSH layout exists FOR: documents arrive as micro-batches of raw
@@ -644,8 +640,8 @@ object StreamQueries {
       .filter(col("doc_id") % 4 === 0).select("doc_id", "text")
     // Two micro-batches split at the median delta id, modtime-ordered
     // (the q_stream_merge_sink replay convention).
-    val base = stagedReplaySlices(s, d, "lsh_ingest_stream",
-      Seq(s"$d/documents.parquet")) { root =>
+    val stream = stagedReplaySlices(s, d, "lsh_ingest_stream",
+      Seq(s"$d/documents.parquet"), delta.schema) { root =>
       val mid = delta.agg((min(col("doc_id")) + max(col("doc_id"))) / 2)
         .head().getDouble(0)
       delta.filter(col("doc_id") <= mid).coalesce(1)
@@ -653,34 +649,16 @@ object StreamQueries {
       delta.filter(col("doc_id") > mid).coalesce(1)
         .write.mode("overwrite").parquet(s"$root/b2")
     }
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(outDir))
-    val stream = s.readStream.schema(delta.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/b*")
+    freshDir(s, outDir)
     def gate(ss: SparkSession, docs: DataFrame): DataFrame = {
       val sets = SimilarityQueries.docSets(docs)
       SimilarityQueries.gateVerdicts(ss, d,
         SimilarityQueries.bandRowsOf(sets), sets)
     }
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          gate(batch.sparkSession, batch).write.mode("append")
-            .parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(ckpt)
+    drain(stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      gate(batch.sparkSession, batch).write.mode("append").parquet(outDir)
+      ()
+    })
     // Read back under the gate's own output schema (a batch that found
     // no near-dup may leave no file to infer it from).
     SimilarityQueries.admit(s, d,
@@ -876,31 +854,35 @@ object StreamQueries {
     runToTable(enriched, OutputMode.Append()).orderBy("event_id")
   }
 
-  /** The shared b1/b2 builder for the event-table replays (merge sink
-    * and CDC apply stage the SAME slices under different tags): split
-    * at the midpoint of the event-time range, one file per slice so
-    * `maxFilesPerTrigger=1` gives exactly two micro-batches. */
-  private def eventsMidpointSlices(ev: DataFrame)(root: String): Unit = {
+  /** The slice builder for the event-table replays (merge sink and CDC
+    * apply stage the SAME slices under different tags; the late replay
+    * stages its own order): split at the midpoint of the event-time
+    * range and write `slices(i)`'s rows, a predicate of the split
+    * timestamp, as one file `b<i+1>`, so `maxFilesPerTrigger=1` gives
+    * exactly one micro-batch per slice. */
+  private def eventsMidpointSlices(ev: DataFrame,
+      slices: (Column => Column)*)(root: String): Unit = {
     val r = ev.agg(unix_micros(min(col("ts"))).as("lo"),
       unix_micros(max(col("ts"))).as("hi")).head()
     val split = timestamp_micros(lit((r.getLong(0) + r.getLong(1)) / 2))
-    ev.filter(col("ts") < split).coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/b1")
-    ev.filter(col("ts") >= split).coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/b2")
+    for ((slice, i) <- slices.zipWithIndex)
+      ev.filter(slice(split)).coalesce(1)
+        .write.mode("overwrite").parquet(s"$root/b${i + 1}")
   }
 
   /** Stage a multi-micro-batch replay source ONCE per corpus (the
     * [[intervalStreams]] discipline, round 10 extended to the b*
-    * replays): the slices are a deterministic ingest-time artifact of
-    * the input table alone, so re-deriving them on every invocation
-    * re-paid one driver action plus a write job per slice. `build`
-    * writes `$root/<slice>` for each of `slices`; their modtimes are
-    * then pinned oldest-first in list order, so the file source's
-    * oldest-first listing replays them in that order on every read. */
+    * replays) and return its stream, `schema`-typed: the slices are a
+    * deterministic ingest-time artifact of the input table alone, so
+    * re-deriving them on every invocation re-paid one driver action
+    * plus a write job per slice. `build` writes `$root/<slice>` for each
+    * of `slices`; their modtimes are then pinned oldest-first in list
+    * order, so the file source's oldest-first listing replays them in
+    * that order, one file per micro-batch, on every read. */
   private def stagedReplaySlices(s: SparkSession, d: String, tag: String,
-      inputs: Seq[String], slices: Seq[String] = Seq("b1", "b2"))
-      (build: String => Unit): String = {
+      inputs: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      slices: Seq[String] = Seq("b1", "b2"))
+      (build: String => Unit): DataFrame = {
     import graft.sources.{SourceQueries, Staging}
     val root = SourceQueries.scratch(d, tag)
     Staging.once(s, root, "v2", inputs) {
@@ -914,7 +896,11 @@ object StreamQueries {
         fs.setTimes(st.getPath, now - (slices.size - i) * 60000L, -1)
       Nil
     }
-    root
+    s.readStream.schema(schema)
+      .option("pathGlobFilter", "*.parquet")
+      .option("maxFilesPerTrigger", "1")
+      .option("latestFirst", "false")
+      .parquet(s"$root/b*")
   }
 
   /** The two watermarked interval-join streams shared by the inner and
@@ -1064,28 +1050,13 @@ object StreamQueries {
     * watermark); StreamingSpec keeps the mechanism-level assertions. */
   def streamLate(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    // Split at the midpoint of the event-time range; each slice lands in
-    // one file (coalesce(1)) so maxFilesPerTrigger=1 gives exactly three
-    // micro-batches, staged once per corpus (stagedReplaySlices pins the
-    // b1 < b2 < b3 modtime order). Harness-side setup, not the plan.
-    val base = stagedReplaySlices(s, d, "late_stream",
-      Seq(s"$d/events.parquet"), Seq("b1", "b2", "b3")) { root =>
-      val r = ev.agg(unix_micros(min(col("ts"))).as("lo"),
-        unix_micros(max(col("ts"))).as("hi")).head()
-      val split = timestamp_micros(lit((r.getLong(0) + r.getLong(1)) / 2))
-      ev.filter(col("ts") >= split).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/b1")
-      ev.filter(lit(false)).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/b2")
-      ev.filter(col("ts") < split).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/b3")
-    }
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/b*")
+    // Newer half, empty flush batch, older half — staged once per corpus
+    // (stagedReplaySlices pins the b1 < b2 < b3 modtime order).
+    // Harness-side setup, not the plan.
+    val stream = stagedReplaySlices(s, d, "late_stream",
+      Seq(s"$d/events.parquet"), ev.schema, Seq("b1", "b2", "b3"))(
+      eventsMidpointSlices(ev, col("ts") >= _, _ => lit(false),
+        col("ts") < _))
     val agg = stream
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -1109,27 +1080,17 @@ object StreamQueries {
     * collided with a previous run's files and doubled the read-back).
     * The oracle then certifies no batch was lost or doubled. */
   def streamForeachBatch(s: SparkSession, d: String): DataFrame = {
-    // One fixed sink name per SF dir: the upfront delete makes reruns
+    // One fixed sink name per SF dir: the upfront clear makes reruns
     // (same or different JVM) idempotent, and nothing accumulates.
     val out = graft.sources.SourceQueries.scratch(d, "foreach_sink")
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath)) fs.delete(outPath, true)
+    freshDir(s, out)
     val transformed = EventStreams.fileStream(s, d)
       .select(col("event_id"), col("user_id"),
         upper(col("event_type")).as("event_type_up"), col("value"))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(ckptRoot), "graft-ckpt-")
-    try {
-      val q = transformed.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(ckpt)
+    drain(transformed.writeStream.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
+    })
     s.read.parquet(out)
       .select("event_id", "user_id", "event_type_up", "value")
       .orderBy("event_id")

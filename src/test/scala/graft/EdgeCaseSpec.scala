@@ -112,8 +112,7 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
       (2L, (1 to 49).map(i => s"t$i").mkString(" ")),
       (3L, (1 to 64).map(i => s"t$i").mkString(" ")),
       (4L, ""))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-chunk-edge").toString
+    val dir = tempCorpus("graft-chunk-edge")
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = graft.operators.TextQueries.textChunk(spark, dir)
@@ -134,8 +133,7 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     // fourth at cum_before 300 opens bin 1.
     import spark.implicits._
     val text = (1 to 100).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-pack-edge").toString
+    val dir = tempCorpus("graft-pack-edge")
     (0L until 4L).map(i => (i, "en", text)).toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = graft.operators.TextQueries.textPack(spark, dir)
@@ -197,8 +195,7 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     // 0.1 — far below dedup_ngram's 0.6. The decoy doc shares nothing.
     val short = "alpha beta gamma delta"
     val long = short + " " + (1 to 18).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-contain").toString
+    val dir = tempCorpus("graft-contain")
     Seq((1L, short), (2L, long), (3L, "zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -162,4 +162,37 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
     assert(files(root).exists(_.getName == "Staging.scala"),
       "the sweep found no Staging seam")
   }
+
+  test("every bounded stream replay goes through StreamQueries' seam: " +
+      "one checkpoint, trigger and slice reader in graft.operators") {
+    // The replay protocol (throwaway checkpoint → AvailableNow → await →
+    // delete, and the one-file-per-batch slice reader) has one owner,
+    // StreamQueries.drain / stagedReplaySlices: each token below may
+    // appear in exactly one code line of graft.operators, in
+    // StreamQueries.scala. The graft.streaming pipelines take a
+    // deployment's checkpoint dir and are out of scope.
+    val root = new java.io.File("src/main/scala/graft/operators")
+    assert(root.isDirectory, s"sweep must run from the repo root")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val protocol = Seq("Trigger.AvailableNow()", "\"checkpointLocation\"",
+      "createTempDirectory(", "\"maxFilesPerTrigger\"")
+    val code = files(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.collect {
+        case (l, i) if !Seq("*", "//", "/*").exists(l.trim.startsWith) =>
+          (f.getName, s"${f.getPath}:${i + 1}: ${l.trim}", l)
+      }
+    }
+    val bad = protocol.flatMap { t =>
+      val sites = code.filter(_._3.contains(t))
+      if (sites.size == 1 && sites.head._1 == "StreamQueries.scala") Nil
+      else Seq(s"$t: ${sites.size} code sites, want one in " +
+        "StreamQueries.scala" + sites.map("\n  " + _._2).mkString)
+    }
+    assert(bad.isEmpty,
+      "bounded-replay protocol outside its seam:\n" + bad.mkString("\n"))
+  }
 }

@@ -197,8 +197,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     val rare = Seq(
       (200L, "alpha beta gamma delta epsilon"),
       (201L, "alpha beta gamma delta epsilon eta"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dfcut").toString
+    val dir = tempCorpus("graft-dfcut")
     (hotDocs ++ rare).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val pairs = TextQueries.dedupNgram(spark, dir)
@@ -228,8 +227,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     val near = Seq(
       (200L, "w1 w2 w3 w4 w5 x1"),
       (201L, "w1 w2 w3 w4 w5 y1"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dfcut-hole").toString
+    val dir = tempCorpus("graft-dfcut-hole")
     (hotDocs ++ near).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val pairs = TextQueries.dedupNgram(spark, dir)
@@ -264,8 +262,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
         Seq((200L, "alpha beta gamma delta epsilon"),
           (201L, "alpha beta gamma delta epsilon zeta"),
           (202L, "omega psi chi phi upsilon tau"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cutcommute").toString
+    val dir = tempCorpus("graft-cutcommute")
     corpus.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // Brute force: per-doc distinct shingle sets, full cross product,
@@ -332,8 +329,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
         Seq((105L, "alpha beta gamma delta epsilon eta"),
           (106L, "alpha beta gamma delta epsilon zeta theta"),
           (107L, "omega psi chi phi upsilon tau"), (108L, "too short"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-skeleton").toString
+    val dir = tempCorpus("graft-skeleton")
     corpus.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // Brute force: exact 3-token shingle sets, all pairs.
@@ -464,8 +460,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     // 40 identical docs: df = 40 ≤ max(50, ceil(0.1 × 40)) = 50 — under
     // the floor the semantics are the exact inverted-index join, so all
     // C(40,2) Jaccard-1.0 pairs must survive.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dfcut-floor").toString
+    val dir = tempCorpus("graft-dfcut-floor")
     (0L until 40L).map(i => (i, "the quick fox")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val n = TextQueries.dedupNgram(spark, dir).count()
@@ -778,8 +773,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     val docs = words.grouped(1250).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mg").toString
+    val dir = tempCorpus("graft-mg")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = graft.operators.AggQueries.aggHeavyHitters(spark, dir)
       .select("term", "cnt").collect()
@@ -806,8 +800,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       (1L, "s1 s2 s3 s4 s5 s6 s7 u1 u2 u3 u4 u5"),
       (2L, "p1 p2 s1 s2 s3 s4 s5 s6 s7 q1 q2"),
       (3L, "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-winnow").toString
+    val dir = tempCorpus("graft-winnow")
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextQueries.textWinnowing(spark, dir).collect()
@@ -842,8 +835,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val n = 4 + rnd.nextInt(27)
       (id, (1 to n).map(_ => s"t${rnd.nextInt(8)}").mkString(" "))
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-winnow-eq").toString
+    val dir = tempCorpus("graft-winnow-eq")
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // Reference: the pre-rewrite formulation, explode + window frame.

@@ -472,8 +472,8 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     // restages on every switch instead of serving A the layout B staged.
     import spark.implicits._
     import graft.operators.TextQueries
-    val base = java.nio.file.Files.createTempDirectory("graft-layoutkey")
-    val (a, b) = (s"$base/p/kp.1", s"$base/q/kp_1")
+    val (a, b) = (tempCorpus("graft-layoutkey", "kp.1"),
+      tempCorpus("graft-layoutkey", "kp_1"))
     (0L -> "a b c d e f" :: 1L -> "a b c d e f" :: 2L -> "p q r s t u" :: Nil)
       .toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$a/documents.parquet")

@@ -900,8 +900,7 @@ class StatsGraphSpec extends AnyFunSuite with SparkFixture {
     // 1.5e5 orders near 5e5 dollars, the sf0.1 regime: n·Σc² and (Σc)²
     // reach ~1e20, past a BIGINT — the guard must compare them exactly
     // without an overflow.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-effectsize").toString
+    val dir = tempCorpus("graft-effectsize")
     spark.range(150000L)
       .select(
         when(col("id") % 5 === 0, lit("1-URGENT")).otherwise(lit("3-MEDIUM"))

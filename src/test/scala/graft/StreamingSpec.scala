@@ -464,28 +464,34 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.set(key, prev)
   }
 
-  test("q_stream_merge_sink merges across two real micro-batches") {
-    // The oracle certifies the FINAL state; this pins that it was built
-    // incrementally: two versioned commits exist, v=0 holds only the
-    // older event-time half (strictly fewer events than final), and the
-    // cross-batch combine added counts rather than overwriting them.
-    val fin = graft.operators.StreamQueries
-      .streamMergeSink(spark, sfDir).collect()
-    val tbl = graft.sources.SourceQueries.scratch(sfDir, "merge_table")
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).sorted
-    assert(versions.sameElements(Array("v=0", "v=1")),
-      s"expected two merge commits, got ${versions.mkString(",")}")
-    val v0 = spark.read.parquet(s"$tbl/v=0")
-      .agg(sum("n_events")).head().getLong(0)
-    val total = fin.map(_.getAs[Long]("n_events")).sum
-    assert(v0 > 0 && v0 < total,
-      s"v=0 should hold a strict prefix of events ($v0 vs $total)")
-    assert(total == Tables.events(spark, sfDir).count(),
-      "merged counts must cover every event exactly once")
-  }
+  // The versioned-merge replays share one helper; each is checked on its
+  // own table and its own count column.
+  for ((query, table, counted) <- Seq(
+      ("q_stream_merge_sink", "merge_table", "n_events"),
+      ("q_stream_cdc_apply", "cdc_table", "n_versions")))
+    test(s"$query merges across two real micro-batches") {
+      // The oracle certifies the FINAL state; this pins that it was built
+      // incrementally: two versioned commits exist, v=0 holds only the
+      // older event-time half (strictly fewer events than final), and
+      // the cross-batch combine added counts rather than overwriting
+      // them. The final commit, not the query's rows, is the total: CDC
+      // filters its tombstoned keys out only at read time.
+      assert(SparkEntry.queries(query)(spark, sfDir).collect().nonEmpty)
+      val tbl = graft.sources.SourceQueries.scratch(sfDir, table)
+      val p = new org.apache.hadoop.fs.Path(tbl)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val versions = fs.listStatus(p).map(_.getPath.getName)
+        .filter(_.startsWith("v=")).sorted
+      assert(versions.sameElements(Array("v=0", "v=1")),
+        s"expected two merge commits, got ${versions.mkString(",")}")
+      def total(v: String): Long = spark.read.parquet(s"$tbl/$v")
+        .agg(sum(counted)).head().getLong(0)
+      val (v0, v1) = (total("v=0"), total("v=1"))
+      assert(v0 > 0 && v0 < v1,
+        s"v=0 should hold a strict prefix of events ($v0 vs $v1)")
+      assert(v1 == Tables.events(spark, sfDir).count(),
+        "merged counts must cover every event exactly once")
+    }
 
   test("staged replay slices: reused unchanged, restaged when the " +
       "input regenerates") {
@@ -496,7 +502,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // invalidates the marker so the slices are rebuilt, never served
     // stale. Runs on a copied corpus because the real one is read-only.
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft-replay-stage").toString
+    val dir = tempCorpus("graft-replay-stage")
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       Paths.get(s"$dir/events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
@@ -542,18 +548,20 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(streamed.toSeq === batch.toSeq)
   }
 
-  test("q_stream_tumbling leaves the session conf as it found it, unset " +
-      "keys included") {
-    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val run = () => SparkEntry.queries("q_stream_tumbling")(spark, sfDir)
-      .collect()
-    run() // the events readers' one-time conf assertions land here
-    spark.conf.unset(noData)
-    val before = spark.conf.getAll
-    run()
-    val after = spark.conf.getAll
-    val changed = (before.keySet ++ after.keySet).toSeq.sorted
-      .filter(k => before.get(k) != after.get(k))
-    assert(changed.isEmpty, s"conf keys changed by the run: $changed")
-  }
+  // One memory-sink replay (runToTable's conf scope) and one
+  // foreachBatch replay (no conf scope of its own).
+  for (query <- Seq("q_stream_tumbling", "q_stream_foreach_batch"))
+    test(s"$query leaves the session conf as it found it, unset " +
+        "keys included") {
+      val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+      val run = () => SparkEntry.queries(query)(spark, sfDir).collect()
+      run() // the events readers' one-time conf assertions land here
+      spark.conf.unset(noData)
+      val before = spark.conf.getAll
+      run()
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet).toSeq.sorted
+        .filter(k => before.get(k) != after.get(k))
+      assert(changed.isEmpty, s"conf keys changed by the run: $changed")
+    }
 }
