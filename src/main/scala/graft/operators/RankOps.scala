@@ -54,12 +54,7 @@ import scala.jdk.CollectionConverters._
   * broadcast, the exact class the round-11 growth sweeps closed; such
   * a caller belongs on a plain keyed aggregation instead. */
 object RankOps {
-
-  /** `a div b` for non-negative longs as a Catalyst `IntegralDivide` —
-    * exact integer division (a Column-API `/` would detour through
-    * IEEE doubles). */
-  private[operators] def idiv(a: Column, b: Column): Column =
-    call_function("div", a.cast("long"), b.cast("long"))
+  import Exact.idiv
 
   /** Shared phase-1 prologue of every two-phase operator here: fail
     * fast on working-column collisions, range-repartition on the total

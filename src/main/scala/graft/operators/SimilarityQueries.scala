@@ -997,14 +997,14 @@ object SimilarityQueries {
       .select(col("gid"), col("blk").as("ablk"), col("vec_id").as("v1"),
         col("embedding").as("ea"), col("nrm").as("na"))
     val b = e.join(broadcast(bp), col("blk") === col("bj"))
-      .select(col("gid"), col("blk").as("bblk"), col("vec_id").as("v2"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
+      .select(col("gid").as("bgid"), col("blk").as("bblk"),
+        col("vec_id").as("v2"), col("embedding").as("eb"), col("nrm").as("nb"))
     // Cross-block groups hold each unordered pair once (in hash order —
     // no id condition there, embedPairs' normalization note); diagonal
     // groups dedup mirrors with v1 < v2. Direction does not matter here:
     // every pair feeds both endpoints below.
     val scored = a.join(b,
-        a("gid") === b("gid") &&
+        col("gid") === col("bgid") &&
           (col("ablk") < col("bblk") || col("v1") < col("v2")))
       .select(col("v1"), col("v2"),
         round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
@@ -1106,9 +1106,9 @@ object SimilarityQueries {
         col("label").as("label1"), col("embedding").as("ea"),
         col("nrm").as("na"))
     val b = e.join(broadcast(bp), col("blk") === col("bj"))
-      .select(col("gid"), col("blk").as("bblk"), col("vec_id").as("v2"),
-        col("label").as("label2"), col("embedding").as("eb"),
-        col("nrm").as("nb"))
+      .select(col("gid").as("bgid"), col("blk").as("bblk"),
+        col("vec_id").as("v2"), col("label").as("label2"),
+        col("embedding").as("eb"), col("nrm").as("nb"))
     val cosSim = round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
     // Cross-block groups (ablk < bblk) hold each unordered pair exactly
     // once — in whichever id order the hash assigned — so they keep every
@@ -1116,7 +1116,7 @@ object SimilarityQueries {
     // groups dedup mirrored pairs with v1 < v2.
     val lo = col("v1") < col("v2")
     a.join(b,
-        a("gid") === b("gid") &&
+        col("gid") === col("bgid") &&
           (col("ablk") < col("bblk") || lo) && cosSim >= 0.4)
       .select(
         when(lo, col("v1")).otherwise(col("v2")).as("v1"),
@@ -1564,11 +1564,11 @@ object SimilarityQueries {
         col("ts.t").as("t"), col("ts.sig").as("sig"))
     val probes = sigs.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
-        col("t"), col("sig"))
+        col("t").as("pt"), col("sig").as("psig"))
     val wn = Window.partitionBy("probe_id")
       .orderBy(col("cos_sim").desc, col("vec_id"))
     probes.join(sigs,
-      probes("t") === sigs("t") && probes("sig") === sigs("sig") &&
+      col("pt") === col("t") && col("psig") === col("sig") &&
         col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), col("pv"), col("embedding"))
       .dropDuplicates("probe_id", "vec_id")

@@ -1614,13 +1614,12 @@ object StatsQueries {
     * the oracle would hold only to a tolerance. Instead: one map-side-
     * combined agg of the EXACT integer moments (x = epoch days, y = price
     * in cents via round(p·100); Σy² exceeds BIGINT at warehouse scale, so
-    * per-row BIGINT products are summed as DECIMAL(38,0) — exact), then
+    * per-row BIGINT products are summed by [[Exact.sum]] — exact), then
     * the closed-form fit as an identical IEEE double expression tree on
     * both engines. Also layout-independent: the answer cannot change
     * under repartitioning, which floating accumulators do not guarantee.
     * One shuffle (5 groups), all moments map-side combined. */
   def aggLinreg(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val xy = orders(s, d).select(
       col("o_orderpriority").as("prio"),
       datediff(col("o_orderdate"), to_date(lit("1970-01-01")))
@@ -1629,11 +1628,9 @@ object StatsQueries {
     val g = xy.groupBy("prio").agg(
       count(lit(1)).as("n"),
       count(lit(1)).cast("double").as("cd"),
-      sum((col("x") * col("x")).cast(dec)).cast("double").as("sxx"),
-      sum((col("x") * col("y")).cast(dec)).cast("double").as("sxy"),
-      sum((col("y") * col("y")).cast(dec)).cast("double").as("syy"),
-      sum(col("x").cast(dec)).cast("double").as("sx"),
-      sum(col("y").cast(dec)).cast("double").as("sy"))
+      moment(col("x") * col("x"), "sxx"), moment(col("x") * col("y"), "sxy"),
+      moment(col("y") * col("y"), "syy"), moment(col("x"), "sx"),
+      moment(col("y"), "sy"))
     g.withColumn("covn", col("cd") * col("sxy") - col("sx") * col("sy"))
       .withColumn("varx", col("cd") * col("sxx") - col("sx") * col("sx"))
       .withColumn("vary", col("cd") * col("syy") - col("sy") * col("sy"))
@@ -1654,13 +1651,12 @@ object StatsQueries {
     *
     * Same discipline as [[aggLinreg]]: weights and prices become exact
     * integers (units, cents) in the scan stage; Σw·p and Σw·p² are
-    * summed as DECIMAL(38,0) (the per-row w·p² BIGINT product is within
+    * summed by [[Exact.sum]] (the per-row w·p² BIGINT product is within
     * 2 orders of Long.MaxValue at warehouse scale — the sum must be
     * wider), and the weighted mean/variance come out of one IEEE
     * expression tree shared with the oracle. One map-side-combined
     * aggregation, closed-form select on a handful of group rows. */
   def aggWeighted(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val wp = lineitem(s, d).select(
       col("l_returnflag"),
       round(col("l_quantity"), 0).cast("long").as("w"),
@@ -1668,10 +1664,8 @@ object StatsQueries {
     wp.groupBy("l_returnflag")
       .agg(
         sum("w").as("sum_qty"),
-        sum(col("w").cast(dec)).cast("double").as("sw"),
-        sum((col("w") * col("p")).cast(dec)).cast("double").as("swp"),
-        sum((col("w") * col("p") * col("p")).cast(dec)).cast("double")
-          .as("swpp"))
+        moment(col("w"), "sw"), moment(col("w") * col("p"), "swp"),
+        moment(col("w") * col("p") * col("p"), "swpp"))
       .select(col("l_returnflag"), col("sum_qty"),
         round(col("swp") / col("sw"), 4).as("wavg_cents"),
         round(sqrt((col("sw") * col("swpp") - col("swp") * col("swp"))
@@ -1716,21 +1710,19 @@ object StatsQueries {
     * itself is accumulation-order-dependent — layout-dependent answers,
     * the thing this family exists to avoid. */
   def aggCorrPairs(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = lineitem(s, d).select(
       col("l_returnflag").as("f"),
       round(col("l_quantity"), 0).cast("long").as("q"),
       round(col("l_extendedprice") * 100, 0).cast("long").as("p"),
       round(col("l_discount") * 100, 0).cast("long").as("dd"))
-    def sd(c: org.apache.spark.sql.Column, n: String) =
-      sum(c.cast(dec)).cast("double").as(n)
     val g = v.groupBy("f").agg(
       count(lit(1)).as("n"),
       count(lit(1)).cast("double").as("c"),
-      sd(col("q"), "sq"), sd(col("p"), "sp"), sd(col("dd"), "sdm"),
-      sd(col("q") * col("q"), "sqq"), sd(col("p") * col("p"), "spp"),
-      sd(col("dd") * col("dd"), "sdd"), sd(col("q") * col("p"), "sqp"),
-      sd(col("q") * col("dd"), "sqd"), sd(col("p") * col("dd"), "spd"))
+      moment(col("q"), "sq"), moment(col("p"), "sp"),
+      moment(col("dd"), "sdm"), moment(col("q") * col("q"), "sqq"),
+      moment(col("p") * col("p"), "spp"), moment(col("dd") * col("dd"), "sdd"),
+      moment(col("q") * col("p"), "sqp"), moment(col("q") * col("dd"), "sqd"),
+      moment(col("p") * col("dd"), "spd"))
     def corr(sab: String, sa: String, sb: String, saa: String,
         sbb: String) =
       round((col("c") * col(sab) - col(sa) * col(sb))
@@ -1769,24 +1761,21 @@ object StatsQueries {
     * accumulators are order-dependent and can't hash-match an oracle).
     *
     * The q_agg_corr_pairs recipe extended to 3rd/4th powers: every sum
-    * is an EXACT integer (decimal(38,0) power sums of the integral
+    * is an EXACT integer ([[Exact.sum]] power sums of the integral
     * quantity — one map-side-combined shuffle), and the closed forms
     * use only * / sqrt with parenthesization mirrored in the oracle —
     * `pow` is deliberately absent (libm pow differs in last ulps across
     * engines; sqrt is IEEE correctly-rounded in both). */
   def aggSkewKurt(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = lineitem(s, d).select(
       col("l_returnflag").as("f"),
       round(col("l_quantity"), 0).cast("long").as("q"))
-    def sd(c: org.apache.spark.sql.Column, n: String) =
-      sum(c.cast(dec)).cast("double").as(n)
     val q = col("q")
     val g = v.groupBy("f").agg(
       count(lit(1)).as("n"),
       count(lit(1)).cast("double").as("c"),
-      sd(q, "s1"), sd(q * q, "s2"), sd(q * q * q, "s3"),
-      sd(q * q * q * q, "s4"))
+      moment(q, "s1"), moment(q * q, "s2"), moment(q * q * q, "s3"),
+      moment(q * q * q * q, "s4"))
     val mean = col("s1") / col("c")
     val m2 = col("s2") / col("c") - mean * mean
     val m3 = col("s3") / col("c") - lit(3) * mean * (col("s2") / col("c")) +
@@ -1854,10 +1843,9 @@ object StatsQueries {
     * Scale shape: one map-side-combined per-value agg over the corpus
     * (the only corpus pass); the window sums and rank run over the
     * VALUE SUPPORT (distinct quantities — ~50 rows), not the data. The
-    * cross-products ride in decimal(38,0) (HUGEINT in the twin) so
+    * cross-products ride in [[Exact.wide]] (HUGEINT in the twin) so
     * 100 TB cumulative counts cannot overflow. */
   def aggKs(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = lineitem(s, d)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(round(col("l_quantity"), 0).cast("long").as("q"),
@@ -1871,8 +1859,8 @@ object StatsQueries {
       sum("c2").over(wOrd).as("cum2"),
       sum("c1").over(wAll).as("n1"),
       sum("c2").over(wAll).as("n2"))
-    val diff = abs(col("cum1").cast(dec) * col("n2") -
-      col("cum2").cast(dec) * col("n1"))
+    val diff = abs(Exact.wide(col("cum1")) * col("n2") -
+      Exact.wide(col("cum2")) * col("n1"))
     e.select(col("q"), col("n1"), col("n2"), diff.as("diff"))
       .withColumn("rn",
         row_number().over(Window.orderBy(col("diff").desc, col("q").asc)))
@@ -1889,7 +1877,7 @@ object StatsQueries {
     * ranks ride in INTEGER HALF-UNITS — the average rank of a tie group
     * is cumlt + (ct+1)/2, so twice it (2·cumlt + ct + 1) is always
     * integral — which keeps the rank sum, U₁, and the tie-correction
-    * term Σ(t³−t) exact in decimal(38,0) (HUGEINT twin). The closed
+    * term Σ(t³−t) exact in [[Exact.wide]] (HUGEINT twin). The closed
     * form (U₁, rank-biserial r, tie-corrected z) uses only ÷ and sqrt
     * on exact operands — correctly rounded IEEE in both engines, so the
     * doubles are emitted UNROUNDED.
@@ -1898,7 +1886,6 @@ object StatsQueries {
     * per-value agg is the only corpus pass; ranks/windows run over the
     * ~50-row value support. */
   def aggMannWhitney(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = lineitem(s, d)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(round(col("l_quantity"), 0).cast("long").as("q"),
@@ -1914,14 +1901,14 @@ object StatsQueries {
         + col("ct") + lit(1L))
     val m = r.agg(
       sum("c1").as("n1"), sum("c2").as("n2"),
-      sum(col("c1").cast(dec) * col("avgrank2")).as("r1two"),
-      sum(col("ct").cast(dec) * col("ct") * col("ct") - col("ct"))
+      sum(Exact.wide(col("c1")) * col("avgrank2")).as("r1two"),
+      sum(Exact.wide(col("ct")) * col("ct") * col("ct") - col("ct"))
         .as("t3"))
     val u = m.select(col("n1"), col("n2"),
-      (col("r1two") - col("n1").cast(dec) * (col("n1") + lit(1L)))
+      (col("r1two") - Exact.wide(col("n1")) * (col("n1") + lit(1L)))
         .as("u1two"),
-      (col("n1").cast(dec) * col("n2")).as("a"),
-      (col("n1") + col("n2")).cast(dec).as("n"), col("t3"))
+      (Exact.wide(col("n1")) * col("n2")).as("a"),
+      Exact.wide(col("n1") + col("n2")).as("n"), col("t3"))
     u.select(col("n1"), col("n2"),
       (col("u1two").cast("double") / lit(2)).as("u1"),
       ((col("a") - col("u1two")).cast("double") / col("a").cast("double"))
@@ -1952,7 +1939,6 @@ object StatsQueries {
     * sort is a binned Lorenz approximation (q_agg_hist's integer bins +
     * cumulative shares) — sketch-class, deliberately not this query. */
   def aggGini(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = orders(s, d).select(
       col("o_orderpriority").as("pri"),
       round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
@@ -1968,14 +1954,14 @@ object StatsQueries {
       count(lit(1)).over(wPart).as("cnt"))
     val g = r.groupBy("pri").agg(
       count(lit(1)).as("n"),
-      sum(col("cents").cast(dec)).as("s"),
-      sum(col("i").cast(dec) * col("cents")).as("w"),
-      sum(when(col("j") <= expr("cnt div 10"), col("cents"))
-        .otherwise(0L).cast(dec)).as("t10"))
+      Exact.sum(col("cents")).as("s"),
+      sum(Exact.wide(col("i")) * col("cents")).as("w"),
+      Exact.sum(when(col("j") <= expr("cnt div 10"), col("cents"))
+        .otherwise(0L)).as("t10"))
     g.select(col("pri"), col("n"), col("s").cast("long").as("total_cents"),
       ((lit(2L) * col("w") - (col("n") + lit(1L)) * col("s"))
         .cast("double") /
-        (col("n").cast(dec) * col("s")).cast("double")).as("gini"),
+        (Exact.wide(col("n")) * col("s")).cast("double")).as("gini"),
       (col("t10").cast("double") / col("s").cast("double"))
         .as("top10_share"))
       .orderBy("pri")
@@ -2475,8 +2461,10 @@ object StatsQueries {
     *  - y ranks come from ONE window spec: rank() = 1 + #less and the
     *    default RANGE frame's count = #less + #ties, so their sum is the
     *    doubled average rank with no per-value count window.
-    *  - the five moments are [[exactSum]]s: two long sums per row
-    *    instead of a per-row decimal(38,0) buffer.
+    *  - the five moments are [[Exact.sum]]s: three long sums per row
+    *    instead of a per-row decimal buffer. The per-row rank products
+    *    rx·ry ride a LONG, which holds them up to ~1.5·10⁹ rows per
+    *    flag (doubled ranks reach 2n).
     * The y window partitions on encode(flag), an injective key that is
     * NOT the grouping column, so the per-flag moment aggregate is planned
     * partial → exchange → final. The final orderBy's range exchange runs
@@ -2499,13 +2487,12 @@ object StatsQueries {
       .join(broadcast(hx), col("f") <=> col("hf") && col("q") <=> col("hq"))
       .select(col("f"), col("rx"),
         (rank().over(wy) + count(lit(1)).over(wy)).as("ry"))
-    def sd(c: Column, n: String) = exactSum(c).cast("double").as(n)
     val g = r.groupBy("f").agg(
       count(lit(1)).as("n"), count(lit(1)).cast("double").as("c"),
-      sd(col("rx"), "sx"), sd(col("ry"), "sy"),
-      sd(col("rx") * col("rx"), "sxx"),
-      sd(col("ry") * col("ry"), "syy"),
-      sd(col("rx") * col("ry"), "sxy"))
+      moment(col("rx"), "sx"), moment(col("ry"), "sy"),
+      moment(col("rx") * col("rx"), "sxx"),
+      moment(col("ry") * col("ry"), "syy"),
+      moment(col("rx") * col("ry"), "sxy"))
     // Degenerate-group guard (the q_ts_cusum lesson): a group whose x
     // or y is CONSTANT has zero rank variance — Spark's x/0.0 (NaN/Inf)
     // and DuckDB's NULL-folded division diverge, so both engines emit
@@ -2521,20 +2508,11 @@ object StatsQueries {
       .orderBy("l_returnflag")
   }
 
-  /** Exact sum of a LONG column as decimal(38,0), equal to
-    * `sum(cast(c AS decimal(38,0)))` but carried in two long partial
-    * sums instead of a per-row decimal buffer: c = hi·2³¹ + lo with
-    * hi = c >> 31 (arithmetic shift, so the identity holds for negatives
-    * in two's complement) and lo = c & (2³¹−1) ∈ [0, 2³¹). Since
-    * −2³² ≤ hi < 2³², neither long sum overflows below 2³¹ + 1 rows per
-    * group, and past that ANSI mode throws rather than wraps. The limbs
-    * combine once per group. A NULL row drops out of both sums, so an
-    * all-NULL group sums to NULL. */
-  def exactSum(c: Column): Column = {
-    val dec = "decimal(38,0)"
-    sum(shiftright(c, 31)).cast(dec) * lit(1L << 31) +
-      sum(c.bitwiseAND(lit((1L << 31) - 1))).cast(dec)
-  }
+  /** [[Exact.sum]] of `c` as a double named `n`: an exact integer
+    * moment, rounded once to the IEEE operand the closed forms read (the
+    * twins' HUGEINT → DOUBLE cast). */
+  private def moment(c: Column, n: String): Column =
+    Exact.sum(c).cast("double").as(n)
 
   /** Welch two-sample t-test of price cents, return flag R vs N — the
     * mean-shift significance companion to [[aggMannWhitney]] (U asks
@@ -2542,30 +2520,27 @@ object StatsQueries {
     * units, unequal variances allowed).
     *
     * ONE map-side-combined conditional-moment agg is the only corpus
-    * pass: per-side n / Σx / Σx² as exact decimal(38,0) sums (x² up to
-    * 1e14 per row rides in BIGINT before the decimal sum) cast to
+    * pass: per-side n / Σx / Σx² as [[Exact.sum]]s (x² up to 1e14 per
+    * row rides in BIGINT before the exact sum) cast to
     * double, then mean gap, per-side sample variances, t, and the
     * Welch–Satterthwaite dof come out of a shared closed-form IEEE tree
     * (÷, sqrt, no pow) on exact operands — emitted unrounded,
     * bit-identical across engines. */
   def aggTtest(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = lineitem(s, d)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("in1"),
         when(col("l_returnflag") === "N", 1L).otherwise(0L).as("in2"),
         round(col("l_extendedprice") * 100, 0).cast("long").as("p"))
-    def sd(c: org.apache.spark.sql.Column, n: String) =
-      sum(c.cast(dec)).cast("double").as(n)
     val g = v.agg(
       sum("in1").as("n1"), sum("in2").as("n2"),
       sum("in1").cast("double").as("c1"),
       sum("in2").cast("double").as("c2"),
-      sd(col("in1") * col("p"), "s1a"),
-      sd(col("in2") * col("p"), "s1b"),
-      sd(col("in1") * col("p") * col("p"), "s2a"),
-      sd(col("in2") * col("p") * col("p"), "s2b"))
+      moment(col("in1") * col("p"), "s1a"),
+      moment(col("in2") * col("p"), "s1b"),
+      moment(col("in1") * col("p") * col("p"), "s2a"),
+      moment(col("in2") * col("p") * col("p"), "s2b"))
     val va = (col("c1") * col("s2a") - col("s1a") * col("s1a")) /
       (col("c1") * (col("c1") - lit(1)))
     val vb = (col("c2") * col("s2b") - col("s1b") * col("s1b")) /
@@ -2670,7 +2645,6 @@ object StatsQueries {
     * ulp); the replicate-mean average is rounded 6 (32-term float sum,
     * accumulation order differs). */
   def aggBootstrapCi(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val v = orders(s, d)
       .select(col("o_orderkey").as("id"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
@@ -2680,7 +2654,7 @@ object StatsQueries {
         lit(2147483647L)) % 2 === 0)
     val reps = v.groupBy("rep").agg(
         count(lit(1)).as("n_r"),
-        sum(col("cents").cast(dec)).cast("double").as("s_r"))
+        moment(col("cents"), "s_r"))
       .select(col("rep"),
         (col("s_r") / col("n_r").cast("double")).as("mean_cents"))
     reps.agg(
@@ -2897,7 +2871,8 @@ object StatsQueries {
     * licensed).
     *
     * Determinism: quantities are whole numbers, so per-flag (n, Σx, Σx²)
-    * are exact BIGINTs from ONE map-side-combined conditional agg; the
+    * are exact integers ([[Exact.sum]]) from ONE map-side-combined agg;
+    * s1² and s1t² are exact decimal products, never BIGINT ones; the
     * between/within sums of squares derive from A = Σ s1ᵍ²/nᵍ — each
     * term an exact-operand division, summed over the ≤3-row flag frame
     * (ulp-level order drift vs the 4dp rounding). F is a closed-form
@@ -2907,13 +2882,12 @@ object StatsQueries {
     * the empty corpus) fold to a 'degenerate' verdict, never a throw.
     *
     * Scale: one fact-table scan, algebraic agg (map-side combine), then
-    * everything runs on a ≤3-row frame. s1t² fits a BIGINT through
-    * ~1.8e9 total quantity units; beyond that the decimal(38,0) recipe
-    * of `q_agg_linreg` is the drop-in swap. */
+    * everything runs on a ≤3-row frame. */
   def aggAnova(s: SparkSession, d: String): DataFrame = {
     val q = col("l_quantity").cast("long")
     val g = lineitem(s, d).groupBy("l_returnflag").agg(
-      count(lit(1)).as("n"), sum(q).as("s1"), sum(q * q).as("s2"))
+      count(lit(1)).as("n"), Exact.sum(q).as("s1"),
+      Exact.sum(q * q).as("s2"))
     val t = g.agg(
       count(lit(1)).as("k"), sum("n").as("n"),
       sum("s1").as("s1t"), sum("s2").as("s2t"),
@@ -3112,29 +3086,26 @@ object StatsQueries {
     * experiment dashboards actually compare across studies), with
     * Hedges' small-sample bias correction g = d·(1 − 3/(4N − 9)).
     *
-    * Exactness: both groups' count/sum/sum-of-squares are exact BIGINT
-    * whole DOLLARS (the rounding-scale choice and its overflow argument
-    * are the inline comment below — cents would overflow the squared
-    * sum) from ONE conditional-aggregation scan (no join, no second
-    * pass); the pooled sd and both effect sizes are one shared IEEE
-    * tree over those integers (`sqrt` is correctly rounded on every
-    * engine), emitted rounded 6. Degenerate pooled variance (exact
-    * wide-integer compare) declares NULL. */
+    * Exactness: both groups' count/sum/sum-of-squares are exact
+    * integers ([[Exact.sum]]) of whole DOLLARS from ONE conditional-
+    * aggregation scan (no join, no second pass); the pooled sd and both
+    * effect sizes are one shared IEEE tree over those integers (`sqrt`
+    * is correctly rounded on every engine), emitted rounded 6.
+    * Degenerate pooled variance (exact decimal compare) declares NULL. */
   def aggEffectSize(s: SparkSession, d: String): DataFrame = {
     val urgent = col("o_orderpriority") === "1-URGENT"
-    // Whole DOLLARS, not cents: d and g are scale-invariant, and the
-    // dollar-scale sum of squares stays < 2^63 up to ~3.7e7 rows of
-    // 5e5-dollar orders (cents overflow at ~1e5 rows — measured).
+    // Whole DOLLARS, not cents: d and g are scale-invariant, and a
+    // dollar's square stays a BIGINT per row up to ~3e9-dollar orders.
     val dollars = round(col("o_totalprice"), 0).cast("long")
     val m = orders(s, d).select(urgent.as("u"), dollars.as("c"))
       .agg(
         count(when(col("u"), lit(1))).as("n1"),
-        coalesce(sum(when(col("u"), col("c"))), lit(0L)).as("s1"),
-        coalesce(sum(when(col("u"), col("c") * col("c"))), lit(0L))
+        coalesce(Exact.sum(when(col("u"), col("c"))), lit(0L)).as("s1"),
+        coalesce(Exact.sum(when(col("u"), col("c") * col("c"))), lit(0L))
           .as("q1"),
         count(when(!col("u"), lit(1))).as("n2"),
-        coalesce(sum(when(!col("u"), col("c"))), lit(0L)).as("s2"),
-        coalesce(sum(when(!col("u"), col("c") * col("c"))), lit(0L))
+        coalesce(Exact.sum(when(!col("u"), col("c"))), lit(0L)).as("s2"),
+        coalesce(Exact.sum(when(!col("u"), col("c") * col("c"))), lit(0L))
           .as("q2"))
     val n1 = col("n1").cast("double"); val n2 = col("n2").cast("double")
     val m1 = col("s1").cast("double") / n1
@@ -3148,12 +3119,10 @@ object StatsQueries {
     val g = dEff * (lit(1.0) - lit(3.0) /
       (lit(4.0) * (n1 + n2) - lit(9.0)))
     // n·q > s² on at least one group ⟺ pooled variance > 0; the exact
-    // compare keeps the degenerate case out of the divide. The products
-    // do not fit a BIGINT (≈1e20 at 1.5e5 orders of 5e5 dollars), so
-    // they run as DECIMAL(38,0) — HUGEINT in the twin.
-    val wide = (c: String) => col(c).cast("decimal(38,0)")
-    val varPos = (wide("n1") * wide("q1") > wide("s1") * wide("s1")) ||
-      (wide("n2") * wide("q2") > wide("s2") * wide("s2"))
+    // decimal compare (HUGEINT in the twin) keeps the degenerate case
+    // out of the divide.
+    val varPos = (col("n1") * col("q1") > col("s1") * col("s1")) ||
+      (col("n2") * col("q2") > col("s2") * col("s2"))
     m.select(col("n1"), col("n2"),
       // Empty groups (an empty corpus) leave the means undefined —
       // declared NULL; the guards keep the divides unreachable under

@@ -765,7 +765,7 @@ object TimeSeriesQueries {
     * a positional `lead` equal a time-shift). ACF is computed without
     * ever forming the non-integer mean: with d_t = c·x_t − S₁ (exact
     * BIGINT), r_l = Σ d_t·d_{t+l} / Σ d_t² — the c² factors cancel, the
-    * product sums stay exact integers (summed as DECIMAL(38,0); at
+    * product sums stay exact integers (summed by [[Exact.sum]]; at
     * extreme per-hour volumes the BIGINT per-row product is the first
     * thing to widen), and the one double division at the end is
     * IEEE-identical on both engines.
@@ -806,7 +806,6 @@ object TimeSeriesQueries {
   }
 
   def tsAcf(s: SparkSession, d: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val dense = denseHourly(s, d)
     val w = Window.partitionBy("event_type")
     val lw = Window.partitionBy("event_type").orderBy("hour_us")
@@ -819,9 +818,9 @@ object TimeSeriesQueries {
       lead(dCol, 24).over(lw).as("d24"))
     dd.groupBy("event_type")
       .agg(count(lit(1)).as("n_hours"),
-        sum((col("d") * col("d1")).cast(dec)).as("num1"),
-        sum((col("d") * col("d24")).cast(dec)).as("num24"),
-        sum((col("d") * col("d")).cast(dec)).as("den"))
+        Exact.sum(col("d") * col("d1")).as("num1"),
+        Exact.sum(col("d") * col("d24")).as("num24"),
+        Exact.sum(col("d") * col("d")).as("den"))
       .select(col("event_type"), col("n_hours"),
         round(col("num1").cast("double") / col("den").cast("double"), 6)
           .as("acf_1"),
@@ -997,7 +996,7 @@ object TimeSeriesQueries {
     // integer division rounds it HALF_UP to 4 places and one exact
     // decimal → double cast emits it, so no engine rounds a double and a
     // .xxxx5 tie cannot split Spark from the twin.
-    import RankOps.idiv
+    import Exact.idiv
     val dh = when(col("hn") === col("hp"), lit(1L))
       .otherwise(idiv(col("hn") - col("hp"), lit(hourUs)))
     val num = col("cp") * dh +

@@ -195,4 +195,31 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
     assert(bad.isEmpty,
       "bounded-replay protocol outside its seam:\n" + bad.mkString("\n"))
   }
+
+  test("every exact integer sum or wide product goes through Exact: no " +
+      "decimal(38 literal on a code line elsewhere in src/main") {
+    // Exact integer column arithmetic has one owner,
+    // operators/Exact.scala, whose scaladoc argues each range once; a
+    // hand-rolled decimal(38,0) cast elsewhere is a copy that argues its
+    // own range alone (and a per-row decimal sum is the slow one).
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"sweep must run from the repo root")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val hits = files(root).filter(_.getName != "Exact.scala").flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.collect {
+        case (l, i) if !Seq("*", "//", "/*").exists(l.trim.startsWith) &&
+            l.toLowerCase.contains("decimal(38") =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      "exact integer arithmetic outside graft.operators.Exact:\n" +
+        hits.mkString("\n"))
+    assert(files(root).exists(_.getName == "Exact.scala"),
+      "the sweep found no Exact seam")
+  }
 }

@@ -654,15 +654,19 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("exactSum equals sum(cast(x AS decimal(38,0))) on random, " +
-      "negative and ±2⁶² longs, NULLs and an all-NULL group") {
-    // The two-limb identity c = (c >> 31)·2³¹ + (c & (2³¹−1)) holds in
-    // two's complement for every long, so the limb sums must reproduce
-    // the decimal sum exactly, value and type, NULL groups included.
+  test("Exact.sum equals sum(cast(x AS decimal(38,0))) on random, " +
+      "negative, limb-edge and ±2⁶² longs, NULLs and an all-NULL group") {
+    // The three-limb identity c = (c >> 42)·2⁴² + ((c >> 21) & (2²¹−1))·2²¹
+    // + (c & (2²¹−1)) holds in two's complement for every long, so the
+    // limb sums must reproduce the decimal sum exactly, value and type,
+    // NULL groups included.
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    val edge = Seq(0L, 1L, -1L, (1L << 31) - 1, 1L << 31, -(1L << 31),
-      -(1L << 31) - 1, 1L << 62, -(1L << 62), Long.MaxValue, Long.MinValue)
+    import graft.operators.Exact
+    val edge = Seq(0L, 1L, -1L, 1L << 21, -(1L << 21), 1L << 42,
+      -(1L << 42), (1L << 42) - 1, -(1L << 42) - 1, (1L << 31) - 1,
+      1L << 31, -(1L << 31), -(1L << 31) - 1, 1L << 62, -(1L << 62),
+      Long.MaxValue, Long.MinValue)
     val rng = new scala.util.Random(31L)
     val rows = (0 until 3000).map { i =>
       val g = i % 8
@@ -678,7 +682,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
     val df = rows.toDF("g", "x")
     val got = df.groupBy("g").agg(
-      StatsQueries.exactSum(col("x")).as("e"),
+      Exact.sum(col("x")).as("e"),
       sum(col("x").cast("decimal(38,0)")).as("d"))
     assert(got.schema("e").dataType === DecimalType(38, 0))
     val byG = got.collect().map(r => r.getInt(0) ->
@@ -690,11 +694,11 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       else {
         assert(e.map(x => BigInt(x.toBigIntegerExact)) === Some(exp.sum),
           s"group $g: $e")
-        assert(e === d, s"group $g: exactSum $e vs decimal sum $d")
+        assert(e === d, s"group $g: Exact.sum $e vs decimal sum $d")
       }
     }
     // A global aggregate over no rows is NULL on both sides as well.
-    val none = df.filter(lit(false)).agg(StatsQueries.exactSum(col("x")))
+    val none = df.filter(lit(false)).agg(Exact.sum(col("x")))
       .collect().head
     assert(none.isNullAt(0))
   }

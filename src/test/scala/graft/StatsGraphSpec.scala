@@ -468,20 +468,38 @@ class StatsGraphSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q_agg_anova: SSB+SSW = total SS and F is consistent with them") {
-    val r = StatsQueries.aggAnova(spark, sfDir).collect().head
+    assertAnovaDecomposes(sfDir)
+    // (Σq)² past Long.MaxValue in flag A (Σq = 3.2e9): the per-flag
+    // squares must be exact products, not BIGINT ones.
+    import spark.implicits._
+    val dir = tempCorpus("graft-anova")
+    Seq(("A", 2.0e9), ("A", 1.2e9), ("N", 1.0e9), ("N", 5.0e8))
+      .toDF("l_returnflag", "l_quantity")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    assertAnovaDecomposes(dir)
+  }
+
+  private def assertAnovaDecomposes(dir: String): Unit = {
+    val r = StatsQueries.aggAnova(spark, dir).collect().head
     val (k, n) = (r.getAs[Long]("k_groups"), r.getAs[Long]("n_rows"))
     val (ssb, ssw) = (r.getAs[Double]("ssb"), r.getAs[Double]("ssw"))
     assert(k >= 2 && n > k)
     assert(ssb >= 0 && ssw >= 0)
-    // Independent total-SS replay: Σx² − (Σx)²/n over the raw column.
-    val raw = Tables.lineitem(spark, sfDir)
+    // Independent total-SS replay: Σx² − (Σx)²/n over the raw column,
+    // in exact decimals.
+    val raw = Tables.lineitem(spark, dir)
       .select(col("l_quantity").cast("long").as("q"))
-      .agg(count(lit(1)).as("n"), sum("q").as("s1"),
-        sum(col("q") * col("q")).as("s2")).collect().head
-    val tot = raw.getAs[Long]("s2").toDouble -
-      raw.getAs[Long]("s1").toDouble * raw.getAs[Long]("s1") /
-        raw.getAs[Long]("n")
-    assert(math.abs(ssb + ssw - tot) < 1e-2,
+      .agg(count(lit(1)).as("n"),
+        sum(col("q").cast("decimal(38,0)")).as("s1"),
+        sum((col("q") * col("q")).cast("decimal(38,0)")).as("s2"))
+      .collect().head
+    val mc = java.math.MathContext.DECIMAL128
+    val s1 = new BigDecimal(raw.getDecimal(1), mc)
+    val s2 = new BigDecimal(raw.getDecimal(2), mc)
+    val tot = (s2 - s1 * s1 / raw.getLong(0)).toDouble
+    // The query's sums of squares are doubles: allow their rounding,
+    // relative to the total, beside the 4dp output rounding.
+    assert(math.abs(ssb + ssw - tot) < 1e-2 + 1e-12 * tot,
       s"SS decomposition broken: $ssb + $ssw != $tot")
     val f = r.getAs[Double]("f_stat")
     val expect = (ssb / (k - 1)) / (ssw / (n - k))
@@ -910,6 +928,15 @@ class StatsGraphSpec extends AnyFunSuite with SparkFixture {
           .as("o_totalprice"))
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     assertEffectSizeReplay(dir)
+    // Three urgent orders near 2e9 dollars: that group's Σc² (~1.1e19)
+    // is itself past Long.MaxValue, not only the guard's products.
+    import spark.implicits._
+    val huge = tempCorpus("graft-effectsize-huge")
+    Seq(("1-URGENT", 2.0e9), ("1-URGENT", 1.5e9), ("1-URGENT", 2.2e9),
+        ("3-MEDIUM", 1.0e9), ("3-MEDIUM", 4.0e8), ("5-LOW", 7.5e8))
+      .toDF("o_orderpriority", "o_totalprice")
+      .write.mode("overwrite").parquet(s"$huge/orders.parquet")
+    assertEffectSizeReplay(huge)
   }
 
   test("q_embed_mmr matches a serial greedy replay; diversity holds") {
