@@ -9,6 +9,29 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
+/** The shared signature of [[FloatVecDot]] and [[FloatVecCosine]]: two
+  * `array<float>` / `array<double>` arguments (either mix) in, a double
+  * out, null in → null out. */
+sealed trait VecPair extends BinaryExpression {
+  protected def isFloat(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+  private def isVec(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+    case _ => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (isVec(left.dataType) && isVec(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<float>/array<double> arguments, " +
+        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+}
+
 /** Codegen'd dot product over two `ArrayType(FloatType)` columns.
   *
   * Spark's higher-order functions (`zip_with`/`aggregate`) have no
@@ -28,25 +51,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * supported.
   */
 case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends VecPair {
 
-  private def isVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  private def isFloat(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isVec(left.dataType) && isVec(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>/array<double> arguments, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_vec_dot"
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
@@ -99,25 +105,8 @@ case class FloatVecDot(left: Expression, right: Expression)
   * must filter first.
   */
 case class FloatVecCosine(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends VecPair {
 
-  private def isVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  private def isFloat(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isVec(left.dataType) && isVec(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>/array<double> arguments, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_vec_cosine"
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {

@@ -508,13 +508,10 @@ object CurateQueries {
     // is no longer (strict_min <= t) or a same-quality doc is strictly
     // shorter (lvl_min < t); (q, t) duplicates survive together.
     "q_select_frontier" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    round(least(1.0, len(string_split(text, ' ')) / 100.0)
-        |        * (1 - CAST(len(list_filter(string_split(text, ' '),
-        |              t -> t IN ('a', 'the'))) AS DOUBLE)
-        |            / len(string_split(text, ' '))), 4) AS quality
+        |    ${TextQueries.qualitySql} AS quality
         |  FROM documents),
         |lvl AS (
         |  SELECT quality, min(n_tokens) AS lvl_min
@@ -534,12 +531,9 @@ object CurateQueries {
     // is the EXACT-INTEGER comparison 2*(cum-n) < lang_total — no float
     // threshold anywhere near the boundary row.
     "q_select_head" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id, lang, n_chars,
-        |    round(least(1.0, len(string_split(text, ' ')) / 100.0)
-        |        * (1 - CAST(len(list_filter(string_split(text, ' '),
-        |              t -> t IN ('a', 'the'))) AS DOUBLE)
-        |            / len(string_split(text, ' '))), 4) AS quality
+        |    ${TextQueries.qualitySql} AS quality
         |  FROM documents),
         |cum AS (
         |  SELECT doc_id, lang, n_chars, quality,
@@ -660,10 +654,9 @@ object CurateQueries {
     // is first-match-only by default, Spark's is global), the shared
     // left-associated margin tree, decision = sign of the margin.
     "q_quality_classifier" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |        t -> t IN ('a', 'the'))) AS DOUBLE)
+        |    CAST(${TextQueries.stopCountSql} AS DOUBLE)
         |      / CAST(len(string_split(text, ' ')) AS DOUBLE)
         |      AS stop_rate,
         |    CAST(length(replace(text, ' ', '')) AS DOUBLE)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables._
+import SimilarityQueries.cosListSql
 
 /** Graph-shaped dedup (SURVEY §2.8 extension): fuzzy-dedup clustering.
   *
@@ -38,21 +39,23 @@ object GraphQueries {
     "q_graph_assortativity" -> graphAssortativity _
   )
 
+  /** The cos ≥ 0.4 edge CTE `pairs(v1, v2)`, v1 < v2: the DuckDB twin of
+    * [[SimilarityQueries.embedPairs]]' staged edge store, interpolated
+    * after `WITH` (or `WITH RECURSIVE`) by every graph oracle that reads
+    * that store. */
+  private[operators] def pairsCteSql: String =
+    s"""pairs AS (
+       |  SELECT a.vec_id AS v1, b.vec_id AS v2
+       |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+       |  WHERE ${cosListSql("a.embedding", "b.embedding")} >= 0.4)"""
+      .stripMargin
+
   /** The transitive-closure CTE chain (cos ≥ 0.4 edges → undirected →
     * `reach` fixpoint) shared verbatim by q_dedup_cc's oracle (per-node
     * labels) and q_graph_comp_sizes' (size histogram over the same
     * labels) — one source of truth for the closure in BOTH engines. */
   private[operators] def ccReachSql: String =
-    """WITH RECURSIVE pairs AS (
-      |  SELECT a.vec_id AS v1, b.vec_id AS v2
-      |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      |  WHERE round(
-      |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-      |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-      |      / (sqrt(list_sum(list_transform(a.embedding,
-      |            x -> x::DOUBLE * x::DOUBLE)))
-      |       * sqrt(list_sum(list_transform(b.embedding,
-      |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+    s"""WITH RECURSIVE $pairsCteSql,
       |und AS (SELECT v1, v2 FROM pairs
       |        UNION ALL SELECT v2, v1 FROM pairs),
       |reach(node, lbl) AS (
@@ -91,16 +94,7 @@ object GraphQueries {
     // way); per-node membership = each triangle contributes to all three
     // corners. Same cos ≥ 0.4 edge CTE as q_dedup_cc.
     "q_graph_triangles" ->
-      """WITH pairs AS (
-        |  SELECT a.vec_id AS v1, b.vec_id AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+      s"""WITH $pairsCteSql,
         |und AS (SELECT v1 AS u, v2 AS v FROM pairs
         |        UNION ALL SELECT v2, v1 FROM pairs),
         |deg AS (SELECT u AS node, count(*) AS degree FROM und GROUP BY u),
@@ -130,16 +124,7 @@ object GraphQueries {
     // both tiebreaks are total orders, so the unrolled twin replays the
     // Spark iteration decision-for-decision.
     "q_graph_label_prop" ->
-      ("""WITH pairs AS (
-        |  SELECT a.vec_id AS v1, b.vec_id AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+      (s"""WITH $pairsCteSql,
         |und AS (SELECT v1, v2 FROM pairs
         |        UNION ALL SELECT v2, v1 FROM pairs),
         |l0 AS (
@@ -159,16 +144,7 @@ object GraphQueries {
     // table, the pair aggregation is pure BIGINT — order-independent),
     // adjacency removed by NOT EXISTS, Jaccard an exact rational.
     "q_graph_linkpred" ->
-      """WITH pairs AS (
-        |  SELECT a.vec_id AS v1, b.vec_id AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+      s"""WITH $pairsCteSql,
         |und AS (SELECT v1, v2 FROM pairs
         |        UNION ALL SELECT v2, v1 FROM pairs),
         |deg AS (SELECT v1 AS node, CAST(count(*) AS BIGINT) AS degree
@@ -198,16 +174,7 @@ object GraphQueries {
     // q_graph_label_prop discipline) — pure integer arithmetic
     // throughout, so every round is engine-exact by construction.
     "q_graph_kcore" ->
-      ("""WITH pairs AS (
-        |  SELECT a.vec_id AS v1, b.vec_id AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+      (s"""WITH $pairsCteSql,
         |und AS (SELECT v1, v2 FROM pairs
         |        UNION ALL SELECT v2, v1 FROM pairs),
         |deg AS (SELECT v1 AS node, CAST(count(*) AS BIGINT) AS degree
@@ -243,10 +210,7 @@ object GraphQueries {
         |${LshSql.ccCtes(10)},
         |q AS (
         |  SELECT doc_id,
-        |    round(least(1.0, len(string_split(text, ' ')) / 100.0)
-        |      * (1 - CAST(len(list_filter(string_split(text, ' '),
-        |            t -> t IN ('a', 'the'))) AS DOUBLE)
-        |          / len(string_split(text, ' '))), 4) AS quality
+        |    ${TextQueries.qualitySql} AS quality
         |  FROM documents),
         |g AS (
         |  SELECT l.lbl AS component, CAST(count(*) AS BIGINT) AS n_members,
@@ -264,16 +228,7 @@ object GraphQueries {
     // engine-exact; singletons take the 0.15 no-inlink fixed point in
     // the final left join.
     "q_graph_pagerank" ->
-      ("""WITH pairs AS (
-        |  SELECT a.vec_id AS v1, b.vec_id AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+      (s"""WITH $pairsCteSql,
         |und AS (SELECT v1, v2 FROM pairs
         |        UNION ALL SELECT v2, v1 FROM pairs),
         |deg AS (SELECT v1 AS node, CAST(count(*) AS BIGINT) AS degree
@@ -292,16 +247,7 @@ object GraphQueries {
     // All five sufficient statistics are exact BIGINT sums; r is one
     // closed-form double tree over them — no quantization needed.
     "q_graph_assortativity" ->
-      """WITH pairs AS (
-        |  SELECT a.vec_id AS v1, b.vec_id AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+      s"""WITH $pairsCteSql,
         |dir AS (
         |  SELECT v1 AS src, v2 AS dst FROM pairs
         |  UNION ALL SELECT v2, v1 FROM pairs),
@@ -336,17 +282,11 @@ object GraphQueries {
         |    END, 6) AS assortativity
         |FROM m, nn""".stripMargin,
     "q_graph_modularity" ->
-      """WITH pairs AS (
+      s"""WITH pairs AS (
         |  SELECT a.vec_id AS v1, b.vec_id AS v2,
         |    CAST(a.label AS BIGINT) AS l1, CAST(b.label AS BIGINT) AS l2
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.4),
+        |  WHERE ${cosListSql("a.embedding", "b.embedding")} >= 0.4),
         |intra AS (
         |  SELECT l1 AS label, CAST(count(*) AS BIGINT) AS e_c
         |  FROM pairs WHERE l1 = l2 GROUP BY 1),
@@ -580,7 +520,6 @@ object GraphQueries {
     * no-inlink fixed point 0.15 in the final broadcast-right join. */
   def graphPagerank(s: SparkSession, d: String): DataFrame = {
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .transform(Materialize("graphPagerank.pairs"))
     // The edge list is pre-partitioned on the join key ONCE (the
     // checkpointed LogicalRDD carries its partitioning), so the ten
     // per-round contribution joins add no exchange on the edge side.
@@ -815,6 +754,7 @@ object GraphQueries {
     * lineage cut per round (the k-means checkpoint discipline — without
     * it round r re-derives rounds 1..r−1). */
   def graphLabelProp(s: SparkSession, d: String): DataFrame = {
+    // Kept: lazy, BenchOne sf0.1 noop went 1.34–1.38 → 1.82–1.84 s (4 cores).
     val edges = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
       .transform(Materialize("graphLabelProp.pairs"))
     val und = edges.unionByName(
@@ -881,6 +821,7 @@ object GraphQueries {
     * .embedPairs]] materialized ONCE (localCheckpoint — three consumers:
     * wedge gen via und, adjacency anti-join, degree table). */
   def graphLinkpred(s: SparkSession, d: String): DataFrame = {
+    // Kept: lazy, BenchOne sf0.1 noop went 0.95–1.01 → 1.84–1.97 s (4 cores).
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
       .transform(Materialize("graphLinkpred.pairs"))
     val und = pairs.union(pairs.select(col("v2"), col("v1")))
@@ -942,7 +883,6 @@ object GraphQueries {
     * lineage is cut by localCheckpoint (the k-means discipline). */
   def graphKcore(s: SparkSession, d: String): DataFrame = {
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
-      .transform(Materialize("graphKcore.pairs"))
     // Pre-partitioned ONCE on the per-round join key (v2, the neighbor
     // whose estimate flows in): the checkpointed LogicalRDD carries its
     // partitioning, and est is node-partitioned by construction after
@@ -1000,6 +940,7 @@ object GraphQueries {
     * edge list, one keyed degree agg, then everything runs on the
     * ≤#labels frame (windows over that frame, never a corpus cross). */
   def graphModularity(s: SparkSession, d: String): DataFrame = {
+    // Kept: lazy, BenchOne sf0.1 noop went 0.95–1.02 → 1.31–1.37 s (4 cores).
     val pairs = SimilarityQueries.embedPairs(s, d).select("v1", "v2")
       .transform(Materialize("graphModularity.pairs"))
     val lab = embeddings(s, d)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables._
 import graft.functions.VectorOps._
+import TextQueries.toks
 
 /** Similarity search + fuzzy deduplication over the `embeddings` and
   * `documents` tables (SURVEY §2.8 — the north-star LLM-pipeline surface;
@@ -65,8 +66,11 @@ object SimilarityQueries {
   private[operators] val rboWeights: Seq[String] =
     (1 to 10).map(d => BigDecimal("0.9").pow(d - 1).toString)
 
-  /** Shared cosine-in-double list formula for the MMR oracle. */
-  private def cosListSql(a: String, b: String): String =
+  /** The DuckDB twin of the rounded double cosine (`round(dot / (‖a‖·‖b‖),
+    * 4)` over float lists cast element-wise to double, summed
+    * left-to-right — not DuckDB's float32 `list_cosine_similarity`): the
+    * one copy every oracle interpolates. */
+  private[operators] def cosListSql(a: String, b: String): String =
     s"""round(
        |      list_sum(list_transform(range(1, len($a) + 1),
        |        i -> $a[i]::DOUBLE * $b[i]::DOUBLE))
@@ -327,16 +331,10 @@ object SimilarityQueries {
     // list_cosine_similarity, which computes in float32): float inputs are
     // cast to double element-wise, summed sequentially, rounded to 4 dp.
     "q_sim_topk" ->
-      """WITH p AS (SELECT embedding AS pv FROM embeddings WHERE vec_id = 0),
+      s"""WITH p AS (SELECT embedding AS pv FROM embeddings WHERE vec_id = 0),
         |scored AS (
         |  SELECT e.vec_id, e.label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |        i -> e.embedding[i]::DOUBLE * p.pv[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(p.pv,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("e.embedding", "p.pv")} AS cos_sim
         |  FROM embeddings e CROSS JOIN p WHERE e.vec_id <> 0)
         |SELECT vec_id, label, cos_sim FROM scored
         |ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin,
@@ -348,13 +346,7 @@ object SimilarityQueries {
         |p AS (SELECT embedding AS pv FROM embeddings WHERE vec_id = 0),
         |scored AS (
         |  SELECT bm.doc_id, bm.score,
-        |    round(
-        |      list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |        i -> e.embedding[i]::DOUBLE * p.pv[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(p.pv,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("e.embedding", "p.pv")} AS cos_sim
         |  FROM bm JOIN embeddings e ON e.vec_id = bm.doc_id
         |  CROSS JOIN p)
         |SELECT doc_id, score, cos_sim,
@@ -362,16 +354,10 @@ object SimilarityQueries {
         |    AS BIGINT) AS rnk
         |FROM scored ORDER BY rnk""".stripMargin),
     "q_dedup_embed" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT a.vec_id AS v1, b.vec_id AS v2,
         |    a.label AS label1, b.label AS label2,
-        |    round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("a.embedding", "b.embedding")} AS cos_sim
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
         |SELECT v1, v2, label1, label2, cos_sim FROM scored
         |WHERE cos_sim >= 0.4 ORDER BY v1, v2""".stripMargin,
@@ -412,18 +398,12 @@ object SimilarityQueries {
     // over (cos DESC, vec_id) — the tiebreak the aggregator's total
     // order replicates.
     "q_sim_batch_topk" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT vec_id AS probe_id, embedding AS pv
         |  FROM embeddings WHERE vec_id % 997 = 0),
         |scored AS (
         |  SELECT p.probe_id, e.vec_id,
-        |    round(
-        |      list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |        i -> e.embedding[i]::DOUBLE * p.pv[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(p.pv,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("e.embedding", "p.pv")} AS cos_sim
         |  FROM embeddings e CROSS JOIN p
         |  WHERE e.vec_id <> p.probe_id),
         |ranked AS (
@@ -438,15 +418,9 @@ object SimilarityQueries {
     // formula); ranking is on the ROUNDED score with the neighbor-id
     // tiebreak on both sides, so the top-3 cut is identical.
     "q_embed_knn" ->
-      """WITH pairs AS (
+      s"""WITH pairs AS (
         |  SELECT a.vec_id AS v1, b.vec_id AS v2,
-        |    round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("a.embedding", "b.embedding")} AS cos_sim
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
         |bidir AS (
         |  SELECT v1 AS vec_id, v2 AS neighbor_id, cos_sim FROM pairs
@@ -736,15 +710,9 @@ object SimilarityQueries {
     // Same exact pair scan as the q_dedup_embed twin; thresholds
     // compare the ROUNDED 4dp cosine on both engines; counts exact.
     "q_dedup_sweep" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT a.vec_id AS v1, b.vec_id AS v2,
-        |    round(
-        |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("a.embedding", "b.embedding")} AS cos_sim
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
         |p AS (SELECT * FROM scored WHERE cos_sim >= 0.4),
         |x AS (
@@ -1139,8 +1107,6 @@ object SimilarityQueries {
     * no runtime randomness, so results are stable across runs/engines). */
   private val hashParams: Seq[(Long, Long)] =
     (0 until MinhashK).map(i => (2L * i + 1001L, 7919L * i + 131L))
-
-  private def toks(c: Column): Column = split(c, " ")
 
   private def shingleCol(t: Column): Column = TextQueries.ngrams(t, 3)
 

@@ -265,17 +265,13 @@ object TextQueries {
         |FROM pr GROUP BY pair
         |ORDER BY n DESC, pair LIMIT 20""".stripMargin,
     "q_text_quality" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  round(CAST(len(list_filter(string_split(text, ' '),
-        |        t -> t IN ('a', 'the'))) AS DOUBLE)
+        |  round(CAST($stopCountSql AS DOUBLE)
         |      / len(string_split(text, ' ')), 4) AS stop_ratio,
         |  round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
         |      / len(string_split(text, ' ')), 4) AS avg_tok_len,
-        |  round(least(1.0, len(string_split(text, ' ')) / 100.0)
-        |      * (1 - CAST(len(list_filter(string_split(text, ' '),
-        |            t -> t IN ('a', 'the'))) AS DOUBLE)
-        |          / len(string_split(text, ' '))), 4) AS quality
+        |  $qualitySql AS quality
         |FROM documents ORDER BY doc_id""".stripMargin,
     // Same '. ' sentence split, md5 fingerprints, distinct-doc rule
     // (≥2 docs), and per-doc keep/drop accounting; one exact division.
@@ -832,13 +828,10 @@ object TextQueries {
     // stats. Same quality formula as q_text_quality, same normalization
     // as q_dedup_exact.
     "q_corpus_curate" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id, lang, text,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    round(least(1.0, len(string_split(text, ' ')) / 100.0)
-        |      * (1 - CAST(len(list_filter(string_split(text, ' '),
-        |            t -> t IN ('a', 'the'))) AS DOUBLE)
-        |          / len(string_split(text, ' '))), 4) AS quality
+        |    $qualitySql AS quality
         |  FROM documents),
         |dedup AS (
         |  SELECT min(doc_id) AS doc_id,
@@ -1554,7 +1547,7 @@ object TextQueries {
   private[operators] def normText(c: Column): Column =
     trim(regexp_replace(lower(c), " +", " "))
 
-  private def toks(c: Column): Column = split(c, " ")
+  private[operators] def toks(c: Column): Column = split(c, " ")
 
   /** Sliding n-token windows of a token array, joined with spaces
     * (1-based `element_at`, same as DuckDB's 1-based list index). Caller
@@ -2022,6 +2015,19 @@ object TextQueries {
         .as("quality"))
       .orderBy("doc_id")
   }
+
+  /** The DuckDB twin of [[textQuality]]'s stopword count over the
+    * space-split tokens of `text`. */
+  private[operators] def stopCountSql: String =
+    """len(list_filter(string_split(text, ' '),
+      |            t -> t IN ('a', 'the')))""".stripMargin
+
+  /** The DuckDB twin of [[textQuality]]'s composite `quality` score, the
+    * one copy every oracle that scores documents interpolates. */
+  private[operators] def qualitySql: String =
+    s"""round(least(1.0, len(string_split(text, ' ')) / 100.0)
+       |      * (1 - CAST($stopCountSql AS DOUBLE)
+       |          / len(string_split(text, ' '))), 4)""".stripMargin
 
   /** Language-ID by character-bigram marker counting — the occurrence count
     * of each language's marker bigram via the length-difference trick

@@ -81,22 +81,7 @@ object TimeSeriesQueries {
     // left-to-right float chain as Spark's struct fold, so the MAEs
     // agree to the last bit before their round(4).
     "q_ts_backtest" ->
-      """WITH RECURSIVE hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH RECURSIVE $denseHourlySql,
         |ser AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS c,
         |    array_agg(n ORDER BY hour_us) AS xs
@@ -123,22 +108,7 @@ object TimeSeriesQueries {
     // S and the tie term exact BIGINTs; z's ÷/sqrt tree on exact
     // operands — bit-identical, verdict thresholds the shared double.
     "q_ts_mannkendall" ->
-      """WITH hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH $denseHourlySql,
         |s AS (
         |  SELECT a.event_type,
         |    CAST(sum(CASE WHEN b.n > a.n THEN 1
@@ -176,22 +146,7 @@ object TimeSeriesQueries {
     // centered products sum exactly (HUGEINT here, DECIMAL(38,0) there),
     // and the single final division is IEEE-identical on both engines.
     "q_ts_acf" ->
-      """WITH hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH $denseHourlySql,
         |cs AS (
         |  SELECT event_type, hour_us, n,
         |    CAST(count(*) OVER w AS BIGINT) AS c,
@@ -213,22 +168,7 @@ object TimeSeriesQueries {
     // left-to-right with the first element as the seed, so both engines
     // run the identical IEEE chain (see [[tsEwma]]).
     "q_ts_ewma" ->
-      """WITH hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH $denseHourlySql,
         |ser AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
         |    array_agg(CAST(n AS DOUBLE) ORDER BY hour_us) AS xs
@@ -242,22 +182,7 @@ object TimeSeriesQueries {
     // the DuckDB twin folds through a recursive CTE — same seeds, same
     // left-to-right order, the identical IEEE tree per step.
     "q_ts_holt" ->
-      """WITH RECURSIVE hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH RECURSIVE $denseHourlySql,
         |ser AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
         |    array_agg(CAST(n AS DOUBLE) ORDER BY hour_us) AS xs
@@ -355,20 +280,7 @@ object TimeSeriesQueries {
     // quartiles (quarter-fraction positions over integer counts) and
     // Tukey fences — every comparison exact.
     "q_ts_tukey" ->
-      """WITH hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(range(min(hour_us), max(hour_us) + 1, 3600000000))
-        |      AS hour_us
-        |  FROM hourly GROUP BY event_type),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH $denseHourlySql,
         |fences AS (
         |  SELECT event_type, hour_us, n,
         |    quantile_cont(n, 0.25) OVER w AS q1,
@@ -386,22 +298,7 @@ object TimeSeriesQueries {
     // (the q_ts_holt fold-twin technique); z keeps the (c·x − s1)
     // integer numerator exact before its one cast.
     "q_ts_cusum" ->
-      """WITH RECURSIVE hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH RECURSIVE $denseHourlySql,
         |ser AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS c,
         |    CAST(sum(n) AS BIGINT) AS s1,
@@ -453,7 +350,7 @@ object TimeSeriesQueries {
         |  GROUP BY 1, 2),
         |b AS (SELECT min(hour_us) AS h0, max(hour_us) AS h1 FROM hourly),
         |grid AS (
-        |  SELECT unnest(generate_series(h0, h1, 3600000000)) AS hour_us
+        |  SELECT unnest(range(h0, h1 + 1, 3600000000)) AS hour_us
         |  FROM b),
         |dense AS (
         |  SELECT g.hour_us,
@@ -579,22 +476,7 @@ object TimeSeriesQueries {
     // pure-BIGINT moments with per-cell within terms rounded to integer
     // unit^2 before the cross-cell sum.
     "q_ts_stl" ->
-      """WITH hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH $denseHourlySql,
         |ma AS (
         |  SELECT event_type, hour_us, n,
         |    CAST(count(*) OVER w AS BIGINT) AS wcnt,
@@ -638,22 +520,7 @@ object TimeSeriesQueries {
     // the Spark fold; init means are sums of integer-valued doubles
     // (exact in any order, licensing list_sum vs the sequential fold).
     "q_ts_holtwinters" ->
-      """WITH RECURSIVE hourly AS (
-        |  SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
-        |  FROM hourly GROUP BY 1),
-        |grid AS (
-        |  SELECT event_type,
-        |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
-        |  FROM b),
-        |dense AS (
-        |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly h
-        |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us),
+      s"""WITH RECURSIVE $denseHourlySql,
         |ser AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
         |    array_agg(CAST(n AS DOUBLE) ORDER BY hour_us) AS xs
@@ -755,25 +622,6 @@ object TimeSeriesQueries {
       .orderBy("event_type", "hour_us")
   }
 
-  /** Seasonality probe: sample autocorrelation of the hourly count
-    * series per event type at lag 1 (persistence) and lag 24 (daily
-    * cycle) — the standard first look before any forecasting or
-    * periodic-capacity decision.
-    *
-    * The series is DENSIFIED first (per-type hourly grid, absent hours
-    * = 0 events — the correct reading of a count series, and what makes
-    * a positional `lead` equal a time-shift). ACF is computed without
-    * ever forming the non-integer mean: with d_t = c·x_t − S₁ (exact
-    * BIGINT), r_l = Σ d_t·d_{t+l} / Σ d_t² — the c² factors cancel, the
-    * product sums stay exact integers (summed by [[Exact.sum]]; at
-    * extreme per-hour volumes the BIGINT per-row product is the first
-    * thing to widen), and the one double division at the end is
-    * IEEE-identical on both engines.
-    *
-    * Scale shape: the corpus is touched once by the hourly count agg;
-    * the grid explode, lag window, and ACF agg all run on the resampled
-    * series (types × hours), partitioned by event_type — per-type state
-    * is bounded by the time span, never the event volume. */
   /** Densified per-type hourly count series (absent hours = 0 events) —
     * the resampled input shared by [[tsAcf]] and [[tsEwma]]. Grid spans
     * each type's own min..max hour, so the explode is bounded by the
@@ -805,6 +653,47 @@ object TimeSeriesQueries {
         coalesce(col("n"), lit(0L)).as("n"))
   }
 
+  /** The DuckDB twin of [[denseHourly]]: the `hourly → b → grid → dense`
+    * CTE chain every oracle over the densified series interpolates after
+    * `WITH` (or `WITH RECURSIVE`). */
+  private[operators] def denseHourlySql: String =
+    """hourly AS (
+      |  SELECT event_type,
+      |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS hour_us,
+      |    CAST(count(*) AS BIGINT) AS n
+      |  FROM events GROUP BY 1, 2),
+      |b AS (
+      |  SELECT event_type, min(hour_us) AS h0, max(hour_us) AS h1
+      |  FROM hourly GROUP BY 1),
+      |grid AS (
+      |  SELECT event_type,
+      |    unnest(generate_series(h0, h1, 3600000000)) AS hour_us
+      |  FROM b),
+      |dense AS (
+      |  SELECT g.event_type, g.hour_us, coalesce(h.n, 0) AS n
+      |  FROM grid g LEFT JOIN hourly h
+      |    ON g.event_type = h.event_type AND g.hour_us = h.hour_us)"""
+      .stripMargin
+
+  /** Seasonality probe: sample autocorrelation of the hourly count
+    * series per event type at lag 1 (persistence) and lag 24 (daily
+    * cycle) — the standard first look before any forecasting or
+    * periodic-capacity decision.
+    *
+    * The series is DENSIFIED first (per-type hourly grid, absent hours
+    * = 0 events — the correct reading of a count series, and what makes
+    * a positional `lead` equal a time-shift). ACF is computed without
+    * ever forming the non-integer mean: with d_t = c·x_t − S₁ (exact
+    * BIGINT), r_l = Σ d_t·d_{t+l} / Σ d_t² — the c² factors cancel, the
+    * product sums stay exact integers (summed by [[Exact.sum]]; at
+    * extreme per-hour volumes the BIGINT per-row product is the first
+    * thing to widen), and the one double division at the end is
+    * IEEE-identical on both engines.
+    *
+    * Scale shape: the corpus is touched once by the hourly count agg;
+    * the grid explode, lag window, and ACF agg all run on the resampled
+    * series (types × hours), partitioned by event_type — per-type state
+    * is bounded by the time span, never the event volume. */
   def tsAcf(s: SparkSession, d: String): DataFrame = {
     val dense = denseHourly(s, d)
     val w = Window.partitionBy("event_type")

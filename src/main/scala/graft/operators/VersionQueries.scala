@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables._
 import graft.functions.VectorOps._
+import SimilarityQueries.cosListSql
 
 /** Element-wise sum of fixed-length long arrays as a typed Aggregator
   * (§2.10 tier 3, the TopKOrders precedent): per-partition partials are
@@ -687,7 +688,7 @@ object VersionQueries {
     // cosine is q_sim_topk's explicit double formula including the
     // probe itself (rank 1, cos 1).
     "q_search_rrf" -> (TextQueries.bm25ScoresSql +
-      """,
+      s""",
         |ra AS (
         |  SELECT doc_id,
         |    CAST(row_number() OVER (ORDER BY score DESC, doc_id)
@@ -696,13 +697,7 @@ object VersionQueries {
         |p AS (SELECT embedding AS pv FROM embeddings WHERE vec_id = 0),
         |cs AS (
         |  SELECT e.vec_id AS doc_id,
-        |    round(
-        |      list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |        i -> e.embedding[i]::DOUBLE * p.pv[i]::DOUBLE))
-        |      / (sqrt(list_sum(list_transform(e.embedding,
-        |            x -> x::DOUBLE * x::DOUBLE)))
-        |       * sqrt(list_sum(list_transform(p.pv,
-        |            x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos_sim
+        |    ${cosListSql("e.embedding", "p.pv")} AS cos_sim
         |  FROM embeddings e CROSS JOIN p),
         |rc AS (
         |  SELECT doc_id,

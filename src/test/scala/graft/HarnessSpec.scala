@@ -93,37 +93,24 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
     // .cache()/.persist( in src/main would be a cross-invocation
     // persistent RDD that a release in another query's epilogue would
     // silently destroy — fail at the source.
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"sweep must run from the repo root")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     // The per-invocation persistence itself has one entry point,
     // Materialize: a raw checkpoint elsewhere would be an unnamed
     // materialization, and two sites sharing a name would make the
     // names useless for attribution.
     val named = """Materialize\("([^"]+)"\)""".r
-    val code = files(root).flatMap { f =>
-      // ISO-8859-1: total on bytes — a stray non-UTF-8 literal anywhere
-      // in the tree must not abort the sweep.
-      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
-      val lines = try src.getLines().toVector finally src.close()
-      lines.zipWithIndex.collect {
-        case (l, i) if !Seq("*", "//", "/*").exists(l.trim.startsWith) =>
-          (f, s"${f.getPath}:${i + 1}: $l", l)
-      }
-    }
+    val code = codeLines("src/main/scala")
     val hits = code.collect {
-      case (_, at, l) if l.contains(".cache()") || l.contains(".persist(") =>
+      case SrcLine(_, at, l) if l.contains(".cache()") ||
+          l.contains(".persist(") =>
         s"persists across invocations — $at"
-      case (f, at, l) if f.getName != "Materialize.scala" &&
+      case SrcLine(f, at, l) if f != "Materialize.scala" &&
           (l.contains(".localCheckpoint(") || l.contains(".checkpoint(")) =>
         s"checkpoint outside Materialize — $at"
-      case (_, at, l) if l.contains("Materialize(") &&
+      case SrcLine(_, at, l) if l.contains("Materialize(") &&
           named.findFirstIn(l).isEmpty =>
         s"Materialize without a name literal — $at"
     }
-    val sites = code.flatMap { case (_, at, l) =>
+    val sites = code.flatMap { case SrcLine(_, at, l) =>
       named.findAllMatchIn(l).map(m => m.group(1) -> at) }
     val shared = sites.groupBy(_._1).collect {
       case (n, ats) if ats.size > 1 =>
@@ -141,25 +128,17 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
     // The stage-once protocol (marker format, validity check, delete →
     // build → marker-last) has one owner, sources/Staging.scala; a
     // hand-rolled copy elsewhere is how a layout goes stale unnoticed.
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"sweep must run from the repo root")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     val protocol = Seq("readMarker(", "markStaged(", "MarkerName",
       "_GRAFT_STAGED")
-    val hits = files(root).filter(_.getName != "Staging.scala").flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
-      val lines = try src.getLines().toVector finally src.close()
-      lines.zipWithIndex.collect {
-        case (l, i) if protocol.exists(l.contains) =>
-          s"${f.getPath}:${i + 1}: ${l.trim}"
-      }
+    val lines = sourceLines("src/main/scala")
+    val hits = lines.collect {
+      case SrcLine(f, at, l) if f != "Staging.scala" &&
+          protocol.exists(l.contains) => at
     }
     assert(hits.isEmpty,
       "stage-once protocol outside graft.sources.Staging:\n" +
         hits.mkString("\n"))
-    assert(files(root).exists(_.getName == "Staging.scala"),
+    assert(lines.exists(_.file == "Staging.scala"),
       "the sweep found no Staging seam")
   }
 
@@ -171,27 +150,10 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
     // appear in exactly one code line of graft.operators, in
     // StreamQueries.scala. The graft.streaming pipelines take a
     // deployment's checkpoint dir and are out of scope.
-    val root = new java.io.File("src/main/scala/graft/operators")
-    assert(root.isDirectory, s"sweep must run from the repo root")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val protocol = Seq("Trigger.AvailableNow()", "\"checkpointLocation\"",
+    val code = codeLines("src/main/scala/graft/operators")
+    val bad = Seq("Trigger.AvailableNow()", "\"checkpointLocation\"",
       "createTempDirectory(", "\"maxFilesPerTrigger\"")
-    val code = files(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
-      val lines = try src.getLines().toVector finally src.close()
-      lines.zipWithIndex.collect {
-        case (l, i) if !Seq("*", "//", "/*").exists(l.trim.startsWith) =>
-          (f.getName, s"${f.getPath}:${i + 1}: ${l.trim}", l)
-      }
-    }
-    val bad = protocol.flatMap { t =>
-      val sites = code.filter(_._3.contains(t))
-      if (sites.size == 1 && sites.head._1 == "StreamQueries.scala") Nil
-      else Seq(s"$t: ${sites.size} code sites, want one in " +
-        "StreamQueries.scala" + sites.map("\n  " + _._2).mkString)
-    }
+      .flatMap(strays(code, _, "StreamQueries.scala"))
     assert(bad.isEmpty,
       "bounded-replay protocol outside its seam:\n" + bad.mkString("\n"))
   }
@@ -202,24 +164,72 @@ class HarnessSpec extends AnyFunSuite with SparkFixture with Eventually {
     // operators/Exact.scala, whose scaladoc argues each range once; a
     // hand-rolled decimal(38,0) cast elsewhere is a copy that argues its
     // own range alone (and a per-row decimal sum is the slow one).
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"sweep must run from the repo root")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val hits = files(root).filter(_.getName != "Exact.scala").flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
-      val lines = try src.getLines().toVector finally src.close()
-      lines.zipWithIndex.collect {
-        case (l, i) if !Seq("*", "//", "/*").exists(l.trim.startsWith) &&
-            l.toLowerCase.contains("decimal(38") =>
-          s"${f.getPath}:${i + 1}: ${l.trim}"
-      }
+    val code = codeLines("src/main/scala")
+    val hits = code.collect {
+      case SrcLine(f, at, l) if f != "Exact.scala" &&
+          l.toLowerCase.contains("decimal(38") => at
     }
     assert(hits.isEmpty,
       "exact integer arithmetic outside graft.operators.Exact:\n" +
         hits.mkString("\n"))
-    assert(files(root).exists(_.getName == "Exact.scala"),
+    assert(code.exists(_.file == "Exact.scala"),
       "the sweep found no Exact seam")
+  }
+
+  test("every DuckDB twin that replays a shared frame interpolates that " +
+      "frame's one SQL fragment") {
+    // Each token below is the tail of one shared frame's DuckDB replay:
+    // the rounded double cosine (SimilarityQueries.cosListSql, also under
+    // GraphQueries.pairsCteSql), the dense hourly grid
+    // (TimeSeriesQueries.denseHourlySql) and the stopword count under the
+    // quality composite (TextQueries.stopCountSql / qualitySql). It may
+    // sit on exactly one code line of src/main, inside its fragment; a
+    // hand-typed copy in a twin is a replay a formula change can miss.
+    val code = codeLines("src/main/scala")
+    val bad = Seq(
+      "x::DOUBLE * x::DOUBLE)))), 4)" -> "SimilarityQueries.scala",
+      "generate_series(h0, h1, 3600000000)" -> "TimeSeriesQueries.scala",
+      "t -> t IN ('a', 'the')" -> "TextQueries.scala"
+    ).flatMap { case (t, owner) => strays(code, t, owner) }
+    assert(bad.isEmpty,
+      "shared-frame SQL typed outside its fragment:\n" + bad.mkString("\n"))
+  }
+
+  /** One line of a `.scala` file: the file's name, a `path:line: text`
+    * locator, and the raw line. */
+  private case class SrcLine(file: String, at: String, text: String)
+
+  /** Every line of every `.scala` file under `dir` (relative to the repo
+    * root), read as ISO-8859-1: total on bytes, so a stray non-UTF-8
+    * literal anywhere in the tree cannot abort a sweep. */
+  private def sourceLines(dir: String): Seq[SrcLine] = {
+    val root = new java.io.File(dir)
+    assert(root.isDirectory, s"sweep must run from the repo root")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    files(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.map { case (l, i) =>
+        SrcLine(f.getName, s"${f.getPath}:${i + 1}: ${l.trim}", l)
+      }
+    }
+  }
+
+  /** [[sourceLines]] minus comment lines: those whose first non-blank
+    * text is `//`, `*` or a block-comment opener. */
+  private def codeLines(dir: String): Seq[SrcLine] =
+    sourceLines(dir).filterNot(l =>
+      Seq("*", "//", "/*").exists(l.text.trim.startsWith))
+
+  /** A seam token's violations: empty iff `token` sits on exactly one
+    * line of `code`, in file `owner`. */
+  private def strays(code: Seq[SrcLine], token: String,
+      owner: String): Seq[String] = {
+    val sites = code.filter(_.text.contains(token))
+    if (sites.size == 1 && sites.head.file == owner) Nil
+    else Seq(s"$token: ${sites.size} code sites, want one in $owner" +
+      sites.map("\n  " + _.at).mkString)
   }
 }
